@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   *    the naive translation. Candidates (a tiny set) are then verified with
   *    EXACT Jaccard, so false positives never escape; false negatives are
   *    bounded by 1-(1-t^r)^b (≈1e-18 at J=0.9 with b=32, r=3).
-  * Everything is Column expressions (codegen); the one closure is the
-  * per-doc Bloom mightContain pre-filter in the verify tail (guide §3.2's
-  * own recipe — evaluated once per doc row, never per array element).
+  * Everything is Column expressions (codegen), no UDFs.
   */
 object Dedup {
 
@@ -77,7 +75,7 @@ object Dedup {
     *    consumers (banding/prefix join + verification), and uncached the
     *    optimizer plans full recomputations of the pipeline per use.
     * Callers own unpersist via [[OpCaches.track]]. */
-  private def shingleTable(docs: DataFrame, n: Int): DataFrame =
+  private[graft] def shingleTable(docs: DataFrame, n: Int): DataFrame =
     shingleProjection(docs, n).cache()
 
   /** The uncached projection under [[shingleTable]] — what
@@ -110,56 +108,12 @@ object Dedup {
     * The intersection is a codegen'd merge walk over the sorted arrays
     * (no per-row hash set); the threshold compares the raw double ratio
     * and `jaccard_r` is the [[jaccardE4]] rounding — both pinned so the
-    * oracles replay them.
-    *
-    * Bloom pre-filter (r18, guide §3.2): the candidate table is tiny in
-    * BYTES (two ids per row) while the shingle tables are corpus-sized,
-    * and in the production large-vocab regime candidates touch a SLIVER
-    * of docs — so the pair set is persisted (it was computed exactly once
-    * by the lazy plan anyway), a Bloom filter over its doc ids is built
-    * from the persisted rows, and each shingle side drops definitely-
-    * non-candidate docs BEFORE its verify exchange. False positives only
-    * cost a little extra join input; there are NO false negatives
-    * (mightContain never misses an inserted key) and the join is inner
-    * on the ids, so the result set is unchanged. When both sides are the
-    * SAME table, ONE union-id Bloom filters both so the two filtered
-    * subtrees stay canonically identical (exchange/broadcast reuse still
-    * fires). The per-row mightContain closure is the guide's own §3.2
-    * recipe — one call per DOC row, never per array element. */
-  private def verifyExact(cand0: DataFrame, shA: DataFrame, shB: DataFrame,
+    * oracles replay them. Building it fires no Spark job. */
+  private def verifyExact(cand: DataFrame, shA: DataFrame, shB: DataFrame,
       aName: String, bName: String, threshold: Double): DataFrame = {
-    val spark = cand0.sparkSession
-    val cand = cand0.persist()
-    OpCaches.track(s"dedup.verify.$aName.$bName", Seq(cand))
-    // sizing: distinct candidate doc ids <= 2·pairs; the count runs over
-    // the just-persisted pair table (this also fixes the pair plan's
-    // cost: the heavy candidate join executes once, the verify and the
-    // Bloom build both read the cache)
-    val nPairs = cand.count()
-    val items = math.max(2L * nPairs, 64L)
-    def filtered(sh: DataFrame, bf: org.apache.spark.util.sketch.BloomFilter)
-        : DataFrame = {
-      val b = spark.sparkContext.broadcast(bf)
-      val might = udf((id: Long) => b.value.mightContainLong(id))
-      sh.where(might(col("doc_id")))
-    }
-    val (shAf, shBf) =
-      if (nPairs == 0L)
-        // stat.bloomFilter NPEs on an empty frame (null agg buffer), and
-        // an empty cand makes the inner joins empty whatever feeds them
-        (shA, shB)
-      else if (shA eq shB) {
-        val bf = cand.select(explode(array(col(aName).cast("long"),
-            col(bName).cast("long"))).as("id"))
-          .stat.bloomFilter("id", items, 0.01)
-        val f = filtered(shA, bf)
-        (f, f)
-      } else
-        (filtered(shA, cand.stat.bloomFilter(aName, items, 0.01)),
-          filtered(shB, cand.stat.bloomFilter(bName, items, 0.01)))
     val withSh = cand
-      .join(shAf.select(col("doc_id").as(aName), col("sh").as("sha")), aName)
-      .join(shBf.select(col("doc_id").as(bName), col("sh").as("shb")), bName)
+      .join(shA.select(col("doc_id").as(aName), col("sh").as("sha")), aName)
+      .join(shB.select(col("doc_id").as(bName), col("sh").as("shb")), bName)
     val inter = graft.functions.VectorExpressions
       .sorted_intersect_count(col("sha"), col("shb"))
     val union = size(col("sha")) + size(col("shb")) - inter
@@ -374,10 +328,8 @@ object Dedup {
       threshold: Double = 0.5): DataFrame =
     ngramJaccardPrefix(shingleTable(docs, n), threshold)
 
-  /** The shared PPJoin plan stages, factored so the production path
-    * ([[ngramJaccardPrefix]]) and the stage probe ([[ppjoinStageProbe]])
-    * time the SAME expression trees and can never silently drift
-    * (ADVICE r17: the probe used to duplicate them by copy-paste). */
+  /** The PPJoin plan stages of [[ngramJaccardPrefix]], factored so the
+    * PpjoinProbe main times the SAME expression trees stage by stage. */
 
   /** Per-doc prefix assembly: sort each doc's grams by the GLOBAL total
     * order (document frequency asc, gram asc — rarest first) and keep the
@@ -425,10 +377,10 @@ object Dedup {
     (szA, szB) => ceil(lit(threshold / (1 + threshold)) * (szA + szB) - lit(1e-9))
 
   /** The candidate self-join over an exploded prefix table: common
-    * prefix gram, id order, and the length filter (`min·1.0 >= t·max`,
-    * implied by J <= min/max). With `positionFilter` on, the PPJoin
-    * POSITION filter (Xiao et al. WWW'08 §3.2; r17) applies per JOIN ROW
-    * so pruned rows never reach the pair aggregate: for a common gram g
+    * prefix gram, id order, the length filter (`min·1.0 >= t·max`,
+    * implied by J <= min/max), and the PPJoin POSITION filter (Xiao et
+    * al. WWW'08 §3.2; r17), applied per JOIN ROW so pruned rows never
+    * reach the pair aggregate: for a common gram g
     * at 1-based positions (pa, pb) in the two docs' (df, g)-sorted gram
     * arrays, every OTHER common gram h is either globally < g (then it
     * sits before pa in a AND before pb in b — at most min(pa-1, pb-1)
@@ -441,17 +393,15 @@ object Dedup {
     * that can qualify) and the quadratic candidate mass of degenerate-
     * vocabulary corpora shrinks before the shuffle+aggregate instead of
     * after it (guide §2.3: shuffle fewer bytes). */
-  private[graft] def ppjoinCandJoin(prefix: DataFrame, threshold: Double,
-      positionFilter: Boolean): DataFrame = {
+  private[graft] def ppjoinCandJoin(prefix: DataFrame,
+      threshold: Double): DataFrame = {
     val alphaOf = ppjoinAlpha(threshold)
     val a = prefix.alias("a")
     val b = prefix.alias("b")
-    val base = col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
-      least(col("a.sz"), col("b.sz")).cast("double") >=
-        lit(threshold) * greatest(col("a.sz"), col("b.sz"))
     a.join(b,
-      if (!positionFilter) base
-      else base &&
+      col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id") &&
+        least(col("a.sz"), col("b.sz")).cast("double") >=
+          lit(threshold) * greatest(col("a.sz"), col("b.sz")) &&
         least(col("a.p"), col("b.p")) + // = 1 + min(pa-1, pb-1)
           least(col("a.sz") - col("a.p"), col("b.sz") - col("b.p")) >=
           alphaOf(col("a.sz"), col("b.sz")))
@@ -464,23 +414,19 @@ object Dedup {
     * the side whose last prefix element is globally smallest, so
     *   |a ∩ b|  <=  o + (that side's suffix slack),
     * and any pair with J >= t needs |a ∩ b| >= ceil(t/(1+t)·(szA+szB)).
-    * `sideAware = true` (production, r17) uses exactly that side's
-    * slack via the carried lastp (ties: either side's slack is a valid
-    * bound, the identical gram is in both prefixes — measured
-    * 584,019 → 297,956 candidates entering the exact verify at sf0.1,
-    * prune lossless); `false` is the conservative max-over-both-sides
-    * form the probe keeps for comparison. On corpora where the prefix
+    * The bound uses exactly that side's slack via the carried lastp
+    * (r17; ties: either side's slack is a valid bound, the identical
+    * gram is in both prefixes — measured 584,019 → 297,956 candidates
+    * entering the exact verify at sf0.1 against the max-over-both-sides
+    * slack, prune lossless). On corpora where the prefix
     * filter alone is weak (small shingle vocabularies — every doc
     * shares prefix keys with thousands of others) this bound removes
     * ~90% of candidates before any array is touched. */
-  private[graft] def ppjoinCandPairs(joined: DataFrame, threshold: Double,
-      sideAware: Boolean): DataFrame = {
+  private[graft] def ppjoinCandPairs(joined: DataFrame,
+      threshold: Double): DataFrame = {
     val alphaOf = ppjoinAlpha(threshold)
-    val slack =
-      if (sideAware)
-        when(col("lastA") <= col("lastB"), col("szA") - col("plenA"))
-          .otherwise(col("szB") - col("plenB"))
-      else greatest(col("szA") - col("plenA"), col("szB") - col("plenB"))
+    val slack = when(col("lastA") <= col("lastB"), col("szA") - col("plenA"))
+      .otherwise(col("szB") - col("plenB"))
     joined
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("o"),
@@ -494,8 +440,7 @@ object Dedup {
   /** The prefix-filtered (AllPairs/PPJoin) exact path of
     * [[ngramJaccard]] — see the dispatch note there: this is the
     * scalable exact plan whenever the gram vocabulary is large enough
-    * that prefix keys are rare. Stage helpers above are shared with the
-    * probe. */
+    * that prefix keys are rare. */
   private[graft] def ngramJaccardPrefix(shBase: DataFrame,
       threshold: Double): DataFrame = {
     val par = shBase.sparkSession.sparkContext.defaultParallelism
@@ -506,45 +451,12 @@ object Dedup {
     // unpersist their caches out from under the memoized pair table
     OpCaches.track("dedup.ngram.prefix", Seq(shBase, prefAgg))
     val cand = ppjoinCandPairs(
-        ppjoinCandJoin(ppjoinPrefixExplode(prefAgg), threshold,
-          positionFilter = true),
-        threshold, sideAware = true)
+        ppjoinCandJoin(ppjoinPrefixExplode(prefAgg), threshold), threshold)
       // explicit fan-out: candidate pairs are tiny in BYTES but heavy in
       // per-row verify CPU, so AQE's byte-based coalescing would fold the
       // verify stage into one task; pinning the exchange keeps it wide
       .repartition(par, col("doc_a"), col("doc_b"))
     verifyExact(cand, shBase, shBase, "doc_a", "doc_b", threshold)
-  }
-
-  /** Stage-split timing hooks for [[ngramJaccardPrefix]] on the
-    * llm_dedup_ngram_ppjoin gate corpus — returns named thunks the
-    * PpjoinProbe main times one by one (dev tooling; never on a query
-    * path). Built from the SAME stage helpers as production, plus the
-    * weaker bound variants kept for comparison. */
-  private[graft] def ppjoinStageProbe(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, threshold: Double = 0.5): Seq[(String, () => Long)] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val shBase = shingleTable(docs, 2)
-    val prefAgg = ppjoinPrefixAssembly(shBase, threshold).cache()
-    OpCaches.track("dedup.ngram.prefixprobe", Seq(shBase, prefAgg))
-    val prefix = ppjoinPrefixExplode(prefAgg)
-    val joinedNoPos = ppjoinCandJoin(prefix, threshold, positionFilter = false)
-    val joined = ppjoinCandJoin(prefix, threshold, positionFilter = true)
-    val par = spark.sparkContext.defaultParallelism
-    val cand = ppjoinCandPairs(joined, threshold, sideAware = false)
-      .repartition(par, col("doc_a"), col("doc_b"))
-    val candTight = ppjoinCandPairs(joined, threshold, sideAware = true)
-    Seq(
-      "shingleTable.count" -> (() => shBase.count()),
-      "prefAgg.count" -> (() => prefAgg.count()),
-      "joinRowsNoPosFilter.count" -> (() => joinedNoPos.count()),
-      "candJoinRows.count" -> (() => joined.count()),
-      "candPairs.count" -> (() => cand.count()),
-      "candPairsTightBound.count" -> (() => candTight.count()),
-      // mirrors production (the side-aware bound feeds the verify)
-      "fullResult.count" ->
-        (() => verifyExact(candTight.repartition(par, col("doc_a"), col("doc_b")),
-          shBase, shBase, "doc_a", "doc_b", threshold).count()))
   }
 
   /** Cross-snapshot near-dedup: for each INCOMING document, its best

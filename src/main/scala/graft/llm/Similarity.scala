@@ -6,15 +6,27 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
+  * Top-k search:
   *  - [[bruteForceTopK]]: exact cosine top-k. The query set is broadcast, so
   *    the candidate side streams once with NO shuffle of the big table —
   *    this is the correctness baseline and also the right plan whenever the
   *    query set is small (the common "retrieve for this batch" case).
-  *  - [[lshTopK]]: random-hyperplane (sign) LSH with Hamming-1 multi-probe.
-  *    Candidates shuffle only on the small bucket id; at 100 TB this turns
-  *    the full scan per query into a handful of bucket lookups, trading
-  *    recall (verified in SimilaritySpec) for a ~bucket-count speedup.
+  *  - approximate variants, each a candidate stage followed by the shared
+  *    exact rerank in the original space: [[lshTopK]] (random-hyperplane
+  *    sign LSH with Hamming multi-probe — candidates shuffle only on the
+  *    small bucket id), [[rpTopK]] (JL-projected prefilter) and
+  *    [[sq8TopK]] (int8-quantized prefilter).
+  *  - trained indexes — IVF ([[ivfTopK]]), PQ ([[pqTopK]]) and IVF-PQ
+  *    ([[ivfPqTopK]]). Each has ONE code path with two halves: an
+  *    `*IndexState` call builds the index (deterministic Lloyd's on a
+  *    bounded driver-side sample, then one corpus pass that assigns
+  *    inverted lists or encodes PQ codes) and a `*TopKFromState` call
+  *    queries it. The `*TopK` calls are exactly build-then-query; a
+  *    production store persists the state once and runs only the query
+  *    half per session.
+  *
+  * Near-duplicate search: [[embeddingNearDup]] (exact all-pairs by
+  * default, banded sign-LSH for production thresholds).
   *
   * All scores are computed in double and integerized (×1e6, round) so
   * results are engine-portable and order-deterministic.
@@ -377,6 +389,10 @@ object Similarity {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(colsDdl))
 
+  /** The empty top-k result every trained index returns without state. */
+  private def emptyTopK(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT")
+
   /** IVF (inverted-file) approximate top-k — the coarse-quantizer ANN
     * shape used at corpus scale: a small k-means codebook is trained on a
     * bounded driver-side sample (training cost independent of corpus
@@ -385,86 +401,71 @@ object Similarity {
     * against only the `nProbe` nearest lists — a shuffle on the (small)
     * centroid id, never on vectors, same join shape as [[lshTopK]].
     * Approximate by design (recall measured in LlmSpec); fully
-    * deterministic: init takes the sample's first `nLists` vectors in
-    * vec_id order and Lloyd's iterations run over the sample in that fixed
-    * order, so no RNG is involved at all. */
+    * deterministic ([[lloyd]] over the vec_id-ordered sample). Exactly
+    * [[ivfIndexState]] followed by [[ivfTopKFromState]]. */
   def ivfTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 5,
       nLists: Int = 16, nProbe: Int = 4, iters: Int = 5,
       sampleSize: Int = 4096): DataFrame =
-    exactRerank(emb,
-      ivfCandidates(emb, numQueries, nLists, nProbe, iters, sampleSize),
-      numQueries, k)
+    ivfIndexState(emb, nLists, iters, sampleSize) match {
+      case Some((centroids, lists)) =>
+        ivfTopKFromState(emb, centroids, lists, numQueries, k, nProbe)
+      case None => emptyTopK(emb.sparkSession)
+    }
 
-  /** Candidate (qid, nid) pairs of [[ivfTopK]]'s coarse probing stage —
-    * the inverted-list build, nProbe probes and pair dedup without the
-    * scoring tail, so the coarse quantizer composes with either scoring
-    * backend: exact rerank ([[ivfTopK]]) or ADC over the PQ code table
-    * ([[ivfPqTopK]] — the literal IVF-PQ pairing). */
-  private[graft] def ivfCandidates(emb: DataFrame, numQueries: Int,
-      nLists: Int, nProbe: Int, iters: Int, sampleSize: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val ds = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    // --- train the codebook on a bounded sample (driver-side: nLists*dim
-    // doubles; the corpus itself is never collected) ---
-    val sample = ds.sort("vec_id").limit(sampleSize).collect()
-      .map { case (_, v) => v.map(_.toDouble) }
-    if (sample.isEmpty)
-      return emptyResult(spark, "qid BIGINT, nid BIGINT")
-    val centroids = ivfTrain(sample, nLists, iters)
-    ivfAssign(emb, centroids)
+  /** Candidate (qid, nid) pairs of IVF's coarse probing stage — each
+    * query's nProbe nearest lists joined against the inverted lists,
+    * pairs deduplicated, no scoring tail — so the coarse quantizer
+    * composes with either scoring backend: exact rerank
+    * ([[ivfTopKFromState]]) or ADC over the PQ code table
+    * ([[ivfPqTopKFromState]] — the literal IVF-PQ pairing). */
+  private[graft] def ivfCandidates(emb: DataFrame, centroids: Array[Array[Double]],
+      lists: DataFrame, numQueries: Int, nProbe: Int): DataFrame =
+    lists.select(col("nid").cast("long"), col("list").cast("int"))
       .join(broadcast(ivfProbes(emb, centroids, numQueries, nProbe)), "list")
       .where(col("qid") =!= col("nid"))
       .select("qid", "nid").distinct()
-  }
 
-  /** Deterministic Lloyd's over the bounded driver-side sample — ONE
-    * definition shared by [[ivfCandidates]] and [[ivfIndexState]] (init
-    * = first nLists sample vectors in vec_id order, fixed iteration
-    * order, empty cells keep their centroid, ties to the lowest index). */
-  private def ivfTrain(sample: Array[Array[Double]], nLists: Int,
+  /** Deterministic Lloyd's k-means — the ONE trainer behind the IVF
+    * coarse quantizer and every PQ sub-quantizer: init takes the first
+    * `k` points in the given order, each iteration walks the points in
+    * that fixed order, empty cells keep their previous centroid, and L2
+    * ties resolve to the lowest index, so no RNG is involved at all. */
+  private def lloyd(points: Array[Array[Double]], k: Int,
       iters: Int): Array[Array[Double]] = {
-    require(sample.length >= nLists, s"need >= $nLists sample vectors")
-    val dim = sample.head.length
-    var centroids = Array.tabulate(nLists)(i => sample(i).clone())
+    require(points.length >= k, s"need >= $k sample vectors")
+    val dim = points.head.length
+    var cs = Array.tabulate(k)(i => points(i).clone())
     var it = 0
     while (it < iters) {
-      val sums = Array.fill(nLists)(new Array[Double](dim))
-      val counts = new Array[Int](nLists)
-      sample.foreach { v =>
-        val c = nearestCentroid(v, centroids)
+      val sums = Array.fill(k)(new Array[Double](dim))
+      val counts = new Array[Int](k)
+      points.foreach { v =>
+        val c = nearestCentroid(v, cs)
         counts(c) += 1
         var i = 0
         while (i < dim) { sums(c)(i) += v(i); i += 1 }
       }
-      centroids = Array.tabulate(nLists)(c =>
-        if (counts(c) == 0) centroids(c)
+      cs = Array.tabulate(k)(c =>
+        if (counts(c) == 0) cs(c)
         else { val m = sums(c); var i = 0; while (i < dim) { m(i) /= counts(c); i += 1 }; m })
       it += 1
     }
-    centroids
+    cs
   }
 
-  /** The inverted-list assignment pass: one (nid, list) row per corpus
-    * vector — broadcast centroids + kernel, no shuffle. Shared by
-    * [[ivfCandidates]] and [[ivfIndexState]]. */
-  private def ivfAssign(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
+  /** The bounded training sample every index trainer reads: the first
+    * `sampleSize` vectors in vec_id order, collected to the driver (the
+    * corpus itself is never collected). */
+  private def trainingSample(emb: DataFrame, sampleSize: Int): Array[Array[Float]] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
     emb.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val cs = bcC.value
-        rows.map { case (id, v0) => (id, nearestCentroid(v0.map(_.toDouble), cs)) }
-      }.toDF("nid", "list")
+      .sort("vec_id").limit(sampleSize).collect().map(_._2)
   }
 
   /** Per-query probe lists: the nProbe nearest centroids (squared-L2,
-    * ties to the lower list id via the stable sort over (d, c)) — shared
-    * by the inline and from-state query paths so probing is ONE
-    * definition. */
+    * ties to the lower list id via the stable sort over (d, c)). */
   private def ivfProbes(emb: DataFrame, centroids: Array[Array[Double]],
       numQueries: Int, nProbe: Int): DataFrame = {
     val spark = emb.sparkSession
@@ -641,45 +642,6 @@ object Similarity {
     best
   }
 
-  /** Per-subspace product-quantization codebooks (Jégou et al., TPAMI
-    * 2011): subspace `s` covers dims [s·sub, (s+1)·sub) and gets its own
-    * `ksub`-centroid codebook trained by Lloyd's iterations over the
-    * (driver-side, bounded) sample. Fully deterministic like the IVF
-    * trainer: init takes the sample's first `ksub` subvectors in sample
-    * order, iterations walk the sample in that fixed order, empty cells
-    * keep their previous centroid, L2 ties resolve to the lowest index. */
-  private[graft] def pqCodebooks(sample: Array[Array[Double]], m: Int,
-      ksub: Int, iters: Int): Array[Array[Array[Double]]] = {
-    val dim = sample.head.length
-    val sub = dim / m
-    Array.tabulate(m) { s =>
-      val svs = sample.map(v =>
-        java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-      var cs = Array.tabulate(ksub)(i => svs(i).clone())
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(ksub)(new Array[Double](sub))
-        val counts = new Array[Int](ksub)
-        svs.foreach { v =>
-          val c = nearestCentroid(v, cs)
-          counts(c) += 1
-          var i = 0
-          while (i < sub) { sums(c)(i) += v(i); i += 1 }
-        }
-        cs = Array.tabulate(ksub)(c =>
-          if (counts(c) == 0) cs(c)
-          else {
-            val mc = sums(c)
-            var i = 0
-            while (i < sub) { mc(i) /= counts(c); i += 1 }
-            mc
-          })
-        it += 1
-      }
-      cs
-    }
-  }
-
   /** Unit-normalized double view of a float vector (zero vectors pass
     * through unscaled). PQ trains/encodes on the NORMALIZED vectors so
     * the ADC inner product approximates cosine directly — the per-vector
@@ -694,68 +656,15 @@ object Similarity {
     v
   }
 
-  /** The PQ code table: `m` sub-quantizer codes per vector — the ONLY
-    * corpus-wide state the first stage of [[pqTopK]] scans. At the
-    * defaults (m=8 subspaces × 32 centroids) a 64-dim f32 vector's
-    * 256 bytes compress to 8 five-bit codes (one packed u64, ~3 % of
-    * the raw bytes even stored bytewise): a 100 TB embedding store
-    * shortlists candidates from a ~3 TB code scan. Exposed
-    * package-private as the spec's invariant hook (codes bounded by
-    * ksub, table row-for-row with the corpus). */
-  private[graft] def pqCodes(emb: DataFrame, m: Int = 8, ksub: Int = 32,
-      iters: Int = 5, sampleSize: Int = 4096): DataFrame =
-    pqEncode(emb, m, ksub, iters, sampleSize) match {
-      case Some((codes, _, _)) =>
-        codes.toDF("vec_id", "codes")
-      case None =>
-        emptyResult(emb.sparkSession, "vec_id BIGINT, codes ARRAY<INT>")
-    }
-
-  /** Trained PQ model + per-vector code table, or None on an empty
-    * corpus: (codes, codebooks, subspace width). Training is the bounded
-    * driver-side sample (the IVF discipline); the code table is the ONE
-    * corpus-wide artifact — at 100 TB it is precomputed store state (the
-    * incremental-dedup history-band precedent), not per-query work. */
-  private def pqEncode(emb: DataFrame, m: Int, ksub: Int, iters: Int,
-      sampleSize: Int): Option[(org.apache.spark.sql.Dataset[(Long, Array[Int])],
-        Array[Array[Array[Double]]], Int)] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val ds = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val sample = ds.sort("vec_id").limit(sampleSize).collect()
-      .map { case (_, v) => unitVec(v) }
-    if (sample.isEmpty) return None
-    require(sample.length >= ksub, s"need >= $ksub sample vectors")
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim does not split into $m subspaces")
-    val sub = dim / m
-    val books = pqCodebooks(sample, m, ksub, iters)
-    val bcB = spark.sparkContext.broadcast(books)
-    val codes = ds.mapPartitions { rows =>
-      val bs = bcB.value
-      rows.map { case (id, v0) =>
-        val v = unitVec(v0)
-        val cd = new Array[Int](bs.length)
-        var s = 0
-        while (s < bs.length) {
-          cd(s) = nearestCentroid(
-            java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub), bs(s))
-          s += 1
-        }
-        (id, cd)
-      }
-    }
-    Some((codes, books, sub))
-  }
-
   /** Per-query ADC lookup tables: lut(s)(c) = ⟨query subvector s,
     * codebook s centroid c⟩ — numQueries × m × ksub doubles, a bounded
-    * driver set (the query side of every variant broadcasts anyway). */
+    * driver set (the query side of every variant broadcasts anyway). The
+    * subspace width is the books' centroid width. */
   private def adcLuts(emb: DataFrame, books: Array[Array[Array[Double]]],
-      sub: Int, numQueries: Int): Array[(Long, Array[Array[Double]])] = {
+      numQueries: Int): Array[(Long, Array[Array[Double]])] = {
     val spark = emb.sparkSession
     import spark.implicits._
+    val sub = books(0)(0).length
     emb.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .filter(_._1 < numQueries).collect().sortBy(_._1).map { case (qid, v0) =>
@@ -772,12 +681,19 @@ object Similarity {
       }
   }
 
-  /** The ONE ADC scan: score every (nid, codes) row against every
-    * query's LUT — m array lookups + adds per (query, vector), the
-    * stage that replaces full-width dot products. Shared by [[pqTopK]]
-    * and [[pqTopKFromState]] so the scoring arithmetic (left-to-right
-    * subspace order, e6 floor rounding, self-exclusion) has exactly one
-    * definition. */
+  /** The ADC score of one code row under one query's LUT — m array
+    * lookups + adds, the step that replaces a full-width dot product.
+    * ONE definition for both ADC scans: subspaces summed left-to-right,
+    * e6 floor rounding. */
+  private def adcScoreR(lut: Array[Array[Double]], cd: Array[Int]): Long = {
+    var s = 0.0
+    var i = 0
+    while (i < cd.length) { s += lut(i)(cd(i)); i += 1 }
+    math.floor(s * 1e6 + 0.5).toLong
+  }
+
+  /** The flat-PQ ADC scan: score every (nid, codes) row against every
+    * query's LUT, self excluded. */
   private def adcScore(codes: org.apache.spark.sql.Dataset[(Long, Array[Int])],
       bcL: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Array[Double]])]])
       : DataFrame = {
@@ -787,10 +703,7 @@ object Similarity {
       val ls = bcL.value
       rows.flatMap { case (nid, cd) =>
         ls.iterator.filter(_._1 != nid).map { case (qid, lut) =>
-          var s = 0.0
-          var i = 0
-          while (i < cd.length) { s += lut(i)(cd(i)); i += 1 }
-          (qid, nid, math.floor(s * 1e6 + 0.5).toLong)
+          (qid, nid, adcScoreR(lut, cd))
         }
       }
     }.toDF("qid", "nid", "approx_r")
@@ -807,13 +720,14 @@ object Similarity {
   /** Product-quantized approximate top-k with exact rerank — the
     * memory-compressed ANN shape (FAISS's PQ/IVF-PQ standard) a 100 TB
     * embedding store actually serves from: vectors are stored as `m`
-    * sub-quantizer codes ([[pqCodes]] — ~0.4 % of the f32 bytes at the
-    * defaults), and query scoring is ADC (asymmetric distance
-    * computation): per query, an m×ksub table of partial inner products
-    * between the query's subvectors and the codebook centroids is built
-    * ONCE, so scoring a corpus vector is `m` array lookups + adds — no
-    * full-width arithmetic until the exact rerank touches the
-    * `k·poolFactor` pool.
+    * sub-quantizer codes (the code table of [[pqIndexState]] — ~3 % of
+    * the f32 bytes at the defaults), and query scoring is ADC
+    * (asymmetric distance computation): per query, an m×ksub table of
+    * partial inner products between the query's subvectors and the
+    * codebook centroids is built ONCE, so scoring a corpus vector is `m`
+    * array lookups + adds — no full-width arithmetic until the exact
+    * rerank touches the `k·poolFactor` pool. Exactly [[pqIndexState]]
+    * followed by [[pqTopKFromState]].
     *
     * Plan shape: codebook training is a bounded driver-side sample (the
     * IVF discipline — cost independent of corpus size); encoding is one
@@ -821,9 +735,7 @@ object Similarity {
     * code table once and shuffles only (qid, nid, score) longs into the
     * per-query pool cut; the rerank joins full vectors for pool-sized
     * candidates only. Orthogonal to IVF by construction — composing the
-    * two (probe IVF lists, ADC-score within them) is the literal IVF-PQ
-    * pairing and needs no new machinery, the code table simply replaces
-    * the vector column in the probed lists.
+    * two (probe IVF lists, ADC-score within them) is [[ivfPqTopK]].
     *
     * Deterministic end-to-end: seedless (sample order = vec_id order),
     * ADC sums run over subspaces left-to-right, pool and rerank ties
@@ -840,24 +752,26 @@ object Similarity {
     * re-measure with PqProbe before the next corpus decade. */
   def pqTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 5,
       m: Int = 8, ksub: Int = 64, iters: Int = 5,
-      sampleSize: Int = 4096, poolFactor: Int = 320): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val (codes, books, sub) = pqEncode(emb, m, ksub, iters, sampleSize).getOrElse(
-      return emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT"))
-    val bcL = spark.sparkContext.broadcast(adcLuts(emb, books, sub, numQueries))
-    exactRerank(emb, adcPool(adcScore(codes, bcL), k * poolFactor), numQueries, k)
-  }
+      sampleSize: Int = 4096, poolFactor: Int = 320): DataFrame =
+    pqIndexState(emb, m, ksub, iters, sampleSize) match {
+      case Some((books, codes)) =>
+        pqTopKFromState(emb, books, codes, numQueries, k, poolFactor)
+      case None => emptyTopK(emb.sparkSession)
+    }
 
-  /** The persisted PQ index artifacts — what a production embedding
-    * store writes ONCE per index build and every query session reads
-    * back, instead of re-training and re-encoding per query (the
+  /** Build the PQ index (Jégou et al., TPAMI 2011) — what a production
+    * embedding store writes ONCE per index build and every query session
+    * reads back, instead of re-training and re-encoding per query (the
     * [[Dedup.shingleState]]/[[Dedup.bandState]] precedent applied to
-    * ANN): `books(subspace, cid, centroid array<double>)` — the trained
-    * model, m·ksub rows, driver-bounded — and `codes(vec_id, codes
-    * array<int>)` — the ONE corpus-wide artifact (~3 % of the raw f32
-    * bytes at the defaults). Both plain UNCACHED frames (the expected
-    * single consumer is a `.write`).
+    * ANN). Subspace `s` covers dims [s·sub, (s+1)·sub) of the
+    * unit-normalized vectors and gets its own `ksub`-centroid codebook,
+    * trained by [[lloyd]] on the bounded driver-side sample; one
+    * broadcast+kernel pass then encodes every vector. Returns
+    * `books(subspace, cid, centroid array<double>)` — the trained model,
+    * m·ksub rows, driver-bounded — and `codes(vec_id, codes array<int>)`
+    * — the ONE corpus-wide artifact (~3 % of the raw f32 bytes at the
+    * defaults). Both plain UNCACHED frames (the expected single consumer
+    * is a `.write`).
     *
     * CONSISTENCY CONTRACT (the [[Dedup.shingleState]] wording): the
     * `(m, ksub)` used to build the artifacts are BAKED INTO their
@@ -867,41 +781,72 @@ object Similarity {
     * silently scores garbage). Store them together, version them
     * together. Returns None on an empty corpus. */
   def pqIndexState(emb: DataFrame, m: Int = 8, ksub: Int = 64,
-      iters: Int = 5, sampleSize: Int = 4096): Option[(DataFrame, DataFrame)] =
-    pqEncode(emb, m, ksub, iters, sampleSize).map { case (codes, books, _) =>
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val bookRows = for {
-        (book, s) <- books.zipWithIndex.toSeq
-        (c, cid) <- book.zipWithIndex
-      } yield (s, cid, c)
-      (bookRows.toDF("subspace", "cid", "centroid"),
-        codes.toDF("vec_id", "codes"))
-    }
+      iters: Int = 5, sampleSize: Int = 4096): Option[(DataFrame, DataFrame)] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val sample = trainingSample(emb, sampleSize).map(unitVec)
+    if (sample.isEmpty) return None
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim does not split into $m subspaces")
+    val sub = dim / m
+    val books = Array.tabulate(m)(s => lloyd(
+      sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub)),
+      ksub, iters))
+    val bcB = spark.sparkContext.broadcast(books)
+    val codes = emb.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .mapPartitions { rows =>
+        val bs = bcB.value
+        rows.map { case (id, v0) =>
+          val v = unitVec(v0)
+          val cd = new Array[Int](bs.length)
+          var s = 0
+          while (s < bs.length) {
+            cd(s) = nearestCentroid(
+              java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub), bs(s))
+            s += 1
+          }
+          (id, cd)
+        }
+      }
+    val bookRows = for {
+      (book, s) <- books.zipWithIndex.toSeq
+      (c, cid) <- book.zipWithIndex
+    } yield (s, cid, c)
+    Some((bookRows.toDF("subspace", "cid", "centroid"), codes.toDF("vec_id", "codes")))
+  }
 
-  /** [[pqTopK]] with the index supplied as PRECOMPUTED state
-    * ([[pqIndexState]], typically read back from storage): the query
-    * session pays the bounded per-query LUT build, the narrow code-table
-    * scan, and the pool-sized exact rerank — never the training sample
-    * collect or the corpus-wide encode pass. At 100 TB this is the
-    * operating split: the index builds once per snapshot, queries run
-    * all day. Results are bit-identical to the inline [[pqTopK]] by
-    * construction (training is deterministic, the state is exact), which
-    * the llm_ann_pq_state gate re-asserts at every sf the driver runs
-    * and AnnStateSpec pins through a real parquet round-trip. */
+  /** The PQ codebooks of a [[pqIndexState]] `books` table, indexed
+    * (subspace)(cid); empty when the table is. */
+  private def booksFromState(books: DataFrame): Array[Array[Array[Double]]] = {
+    val spark = books.sparkSession
+    import spark.implicits._
+    val rows = books
+      .select(col("subspace").cast("int"), col("cid").cast("int"), col("centroid"))
+      .as[(Int, Int, Array[Double])].collect()
+    if (rows.isEmpty) Array.empty
+    else Array.tabulate(rows.iterator.map(_._1).max + 1)(s =>
+      rows.filter(_._1 == s).sortBy(_._2).map(_._3))
+  }
+
+  /** [[pqTopK]]'s query side over PRECOMPUTED state ([[pqIndexState]],
+    * typically read back from storage): the query session pays the
+    * bounded per-query LUT build, the narrow code-table scan, and the
+    * pool-sized exact rerank — never the training sample collect or the
+    * corpus-wide encode pass. At 100 TB this is the operating split: the
+    * index builds once per snapshot, queries run all day. Training is
+    * deterministic and the state is exact, so a rebuilt or
+    * parquet-round-tripped state answers bit-identically to the first
+    * build — the llm_ann_pq_state gate re-asserts it at every sf the
+    * driver runs and AnnStateSpec pins it through a real parquet round
+    * trip. */
   def pqTopKFromState(emb: DataFrame, books: DataFrame, codes: DataFrame,
       numQueries: Int = 10, k: Int = 5, poolFactor: Int = 320): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bookRows = books
-      .select(col("subspace").cast("int"), col("cid").cast("int"), col("centroid"))
-      .as[(Int, Int, Array[Double])].collect()
-    if (bookRows.isEmpty)
-      return emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT")
-    val m = bookRows.iterator.map(_._1).max + 1
-    val bks = Array.tabulate(m)(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    val sub = bks(0)(0).length
-    val bcL = spark.sparkContext.broadcast(adcLuts(emb, bks, sub, numQueries))
+    val bks = booksFromState(books)
+    if (bks.isEmpty) return emptyTopK(spark)
+    val bcL = spark.sparkContext.broadcast(adcLuts(emb, bks, numQueries))
     val cds = codes.select(col("vec_id").cast("long"), col("codes"))
       .as[(Long, Array[Int])]
     exactRerank(emb, adcPool(adcScore(cds, bcL), k * poolFactor), numQueries, k)
@@ -913,34 +858,31 @@ object Similarity {
     * of the corpus), PQ's ADC decides HOW CHEAPLY each survivor is
     * scored (m lookup-adds over the code table instead of a full-width
     * dot product), and the shared exact rerank touches raw vectors only
-    * for the k·poolFactor pool. At 100 TB this is the index a production
-    * embedding store actually serves: the coarse lists and the code
-    * table are the persisted index state, the raw floats are cold
-    * storage the rerank pages in. Every shuffle in the plan carries ids
-    * and small ints/longs only. Recall compounds BOTH approximations —
-    * measured (PqProbe, 2026-08-15) 0.88/0.92/0.92/0.94 across
-    * sf0.001/0.01/0.1/sf1 at the round-14 defaults, decaying to 0.76 at
-    * the sf10 fifth decade (razor-thin over the 0.75 floor); the
-    * re-tuned ksub=64/pool=320x restores the margin there (PqProbe
-    * 2026-08-16: pool=320x alone lifts 0.76→0.82, and the shared-ksub
-    * bump rides the flat-PQ re-tune). Floor gated at 0.75 in
-    * llm_sim_topk_ivfpq. */
+    * for the k·poolFactor pool. Exactly [[ivfIndexState]] and
+    * [[pqIndexState]] followed by [[ivfPqTopKFromState]]. At 100 TB this
+    * is the index a production embedding store actually serves: the
+    * coarse lists and the code table are the persisted index state, the
+    * raw floats are cold storage the rerank pages in. Every shuffle in
+    * the plan carries ids and small ints/longs only. Recall compounds
+    * BOTH approximations — measured (PqProbe, 2026-08-15)
+    * 0.88/0.92/0.92/0.94 across sf0.001/0.01/0.1/sf1 at the round-14
+    * defaults, decaying to 0.76 at the sf10 fifth decade (razor-thin
+    * over the 0.75 floor); the re-tuned ksub=64/pool=320x restores the
+    * margin there (PqProbe 2026-08-16: pool=320x alone lifts 0.76→0.82,
+    * and the shared-ksub bump rides the flat-PQ re-tune). Floor gated at
+    * 0.75 in llm_sim_topk_ivfpq. */
   def ivfPqTopK(emb: DataFrame, numQueries: Int = 10, k: Int = 5,
       nLists: Int = 16, nProbe: Int = 4, m: Int = 8, ksub: Int = 64,
-      iters: Int = 5, sampleSize: Int = 4096, poolFactor: Int = 320): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val (codes, books, sub) = pqEncode(emb, m, ksub, iters, sampleSize).getOrElse(
-      return emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT"))
-    val cand = ivfCandidates(emb, numQueries, nLists, nProbe, iters, sampleSize)
-    val bcL = spark.sparkContext.broadcast(adcLuts(emb, books, sub, numQueries))
-    val scored = adcScoreCand(cand, codes.toDF("nid", "codes"), bcL)
-    exactRerank(emb, adcPool(scored, k * poolFactor), numQueries, k)
-  }
+      iters: Int = 5, sampleSize: Int = 4096, poolFactor: Int = 320): DataFrame =
+    (ivfIndexState(emb, nLists, iters, sampleSize),
+        pqIndexState(emb, m, ksub, iters, sampleSize)) match {
+      case (Some((centroids, lists)), Some((books, codes))) =>
+        ivfPqTopKFromState(emb, centroids, lists, books, codes,
+          numQueries, k, nProbe, poolFactor)
+      case _ => emptyTopK(emb.sparkSession)
+    }
 
-  /** The ONE candidate-scoped ADC scan (IVF-PQ's scoring stage) — shared
-    * by [[ivfPqTopK]] and [[ivfPqTopKFromState]] so the arithmetic
-    * (left-to-right subspaces, e6 floor rounding) has one definition. */
+  /** IVF-PQ's scoring stage: ADC over only the IVF candidate pairs. */
   private def adcScoreCand(cand: DataFrame, codes: DataFrame,
       bcL: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Array[Double]])]])
       : DataFrame = {
@@ -951,90 +893,76 @@ object Similarity {
       .as[(Long, Long, Array[Int])]
       .mapPartitions { rows =>
         val ls = bcL.value.toMap
-        rows.map { case (qid, nid, cd) =>
-          val lut = ls(qid)
-          var s = 0.0
-          var i = 0
-          while (i < cd.length) { s += lut(i)(cd(i)); i += 1 }
-          (qid, nid, math.floor(s * 1e6 + 0.5).toLong)
-        }
+        rows.map { case (qid, nid, cd) => (qid, nid, adcScoreR(ls(qid), cd)) }
       }.toDF("qid", "nid", "approx_r")
   }
 
-  /** The persisted IVF coarse-index artifacts (see [[pqIndexState]] —
-    * together they are the TWO things a FAISS-style production index
-    * stores): `centroids(list, centroid array<double>)` — nLists rows,
-    * the trained coarse quantizer — and `lists(nid, list)` — the
-    * corpus-wide inverted-list assignment, one int per vector. Returns
-    * None on an empty corpus. Same consistency contract: artifacts from
-    * different builds must never mix. */
+  /** Build the IVF coarse index (see [[pqIndexState]] — together they
+    * are the TWO things a FAISS-style production index stores): a
+    * `nLists`-centroid [[lloyd]] codebook over the bounded sample, then
+    * one broadcast+kernel pass (no shuffle) assigning every corpus vector
+    * to its nearest centroid. Returns `centroids(list, centroid
+    * array<double>)` — nLists rows, the trained coarse quantizer — and
+    * `lists(nid, list)` — the corpus-wide inverted-list assignment, one
+    * int per vector. Returns None on an empty corpus. Same consistency
+    * contract: artifacts from different builds must never mix. */
   def ivfIndexState(emb: DataFrame, nLists: Int = 16, iters: Int = 5,
       sampleSize: Int = 4096): Option[(DataFrame, DataFrame)] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val sample = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .sort("vec_id").limit(sampleSize).collect()
-      .map { case (_, v) => v.map(_.toDouble) }
+    val sample = trainingSample(emb, sampleSize).map(_.map(_.toDouble))
     if (sample.isEmpty) return None
-    val centroids = ivfTrain(sample, nLists, iters)
+    val centroids = lloyd(sample, nLists, iters)
+    val bcC = spark.sparkContext.broadcast(centroids)
+    val lists = emb.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .mapPartitions { rows =>
+        val cs = bcC.value
+        rows.map { case (id, v0) => (id, nearestCentroid(v0.map(_.toDouble), cs)) }
+      }.toDF("nid", "list")
     Some((centroids.zipWithIndex.map { case (c, l) => (l, c) }.toSeq
-      .toDF("list", "centroid"),
-      ivfAssign(emb, centroids)))
+      .toDF("list", "centroid"), lists))
   }
 
-  /** [[ivfTopK]] served from the precomputed coarse-index state
+  /** The IVF centroids of an [[ivfIndexState]] `centroids` table, in
+    * list order; empty when the table is. */
+  private[graft] def centroidsFromState(centroids: DataFrame): Array[Array[Double]] = {
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    centroids.select(col("list").cast("int"), col("centroid"))
+      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+  }
+
+  /** [[ivfTopK]]'s query side over the precomputed coarse-index state
     * ([[ivfIndexState]]): the probes vary per call, the centroids and
     * inverted lists do not — so a probe-budget sweep (llm_ann_sweep)
     * builds the index ONCE and replays only the query side per budget.
-    * Bit-identical to the inline path (shared [[ivfProbes]] /
-    * [[exactRerank]] kernels). Callers sweeping several budgets should
-    * persist `lists` across calls. */
+    * Callers sweeping several budgets should persist `lists` across
+    * calls. */
   def ivfTopKFromState(emb: DataFrame, centroids: DataFrame, lists: DataFrame,
       numQueries: Int = 10, k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = centroids.select(col("list").cast("int"), col("centroid"))
-      .as[(Int, Array[Double])].collect()
-    if (cents.isEmpty)
-      return emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT")
-    val cs = cents.sortBy(_._1).map(_._2)
-    val cand = lists.select(col("nid").cast("long"), col("list").cast("int"))
-      .join(broadcast(ivfProbes(emb, cs, numQueries, nProbe)), "list")
-      .where(col("qid") =!= col("nid"))
-      .select("qid", "nid").distinct()
-    exactRerank(emb, cand, numQueries, k)
+    val cs = centroidsFromState(centroids)
+    if (cs.isEmpty) return emptyTopK(emb.sparkSession)
+    exactRerank(emb, ivfCandidates(emb, cs, lists, numQueries, nProbe), numQueries, k)
   }
 
-  /** [[ivfPqTopK]] served ENTIRELY from precomputed index state — the
-    * four artifacts a production embedding store persists (IVF
-    * centroids + inverted lists, PQ codebooks + code table); the query
-    * session pays the bounded probe/LUT builds, the probed-list ADC
-    * scan and the pool rerank — never a training sample collect, an
-    * assignment pass, or an encode pass over the corpus. Bit-identical
-    * to the inline [[ivfPqTopK]] by construction (gate-asserted at
-    * every sf, parquet-round-trip-pinned in AnnStateSpec). */
+  /** [[ivfPqTopK]]'s query side, served ENTIRELY from precomputed index
+    * state — the four artifacts a production embedding store persists
+    * (IVF centroids + inverted lists, PQ codebooks + code table); the
+    * query session pays the bounded probe/LUT builds, the probed-list
+    * ADC scan and the pool rerank — never a training sample collect, an
+    * assignment pass, or an encode pass over the corpus. A rebuilt or
+    * parquet-round-tripped state answers bit-identically to the first
+    * build (gate-asserted at every sf, pinned in AnnStateSpec). */
   def ivfPqTopKFromState(emb: DataFrame, centroids: DataFrame, lists: DataFrame,
       books: DataFrame, codes: DataFrame, numQueries: Int = 10, k: Int = 5,
       nProbe: Int = 4, poolFactor: Int = 320): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    val cents = centroids.select(col("list").cast("int"), col("centroid"))
-      .as[(Int, Array[Double])].collect()
-    val bookRows = books
-      .select(col("subspace").cast("int"), col("cid").cast("int"), col("centroid"))
-      .as[(Int, Int, Array[Double])].collect()
-    if (cents.isEmpty || bookRows.isEmpty)
-      return emptyResult(spark, "qid BIGINT, nid BIGINT, score_r BIGINT, rank BIGINT")
-    val cs = cents.sortBy(_._1).map(_._2)
-    val m = bookRows.iterator.map(_._1).max + 1
-    val bks = Array.tabulate(m)(s => bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
-    val sub = bks(0)(0).length
-    val cand = lists.select(col("nid").cast("long"), col("list").cast("int"))
-      .join(broadcast(ivfProbes(emb, cs, numQueries, nProbe)), "list")
-      .where(col("qid") =!= col("nid"))
-      .select("qid", "nid").distinct()
-    val bcL = spark.sparkContext.broadcast(adcLuts(emb, bks, sub, numQueries))
+    val cs = centroidsFromState(centroids)
+    val bks = booksFromState(books)
+    if (cs.isEmpty || bks.isEmpty) return emptyTopK(spark)
+    val cand = ivfCandidates(emb, cs, lists, numQueries, nProbe)
+    val bcL = spark.sparkContext.broadcast(adcLuts(emb, bks, numQueries))
     val cds = codes.select(col("vec_id").cast("long").as("nid"), col("codes"))
     exactRerank(emb, adcPool(adcScoreCand(cand, cds, bcL), k * poolFactor),
       numQueries, k)

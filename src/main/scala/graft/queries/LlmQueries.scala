@@ -527,20 +527,21 @@ object LlmQueries {
     rows.toDF("nprobe", "floor_e4", "meets_floor")
   }
 
-  /** The index-state round trip as gated DATA: build the PQ index once
+  /** The index-state round trip as gated DATA: build the PQ index
     * ([[Similarity.pqIndexState]]), query FROM the state tables, and
-    * assert the verdicts equal the inline [[Similarity.pqTopK]] —
-    * bit-identical by construction, so `state_equals_inline = false`
-    * (any drift between the build-once and train-per-query paths) fails
-    * the driver's hash gate at every sf. */
+    * assert the verdicts equal [[Similarity.pqTopK]], which builds the
+    * index a second time and queries it — bit-identical because training
+    * is deterministic, so `state_equals_inline = false` (a build that
+    * does not reproduce itself) fails the driver's hash gate at every
+    * sf. */
   def annPqStateGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val inline = simTopKPq(spark, dir)
+    val rebuilt = simTopKPq(spark, dir)
     val same = Similarity.pqIndexState(e) match {
       case Some((books, codes)) =>
         val fs = Similarity.pqTopKFromState(e, books, codes)
-        fs.exceptAll(inline).isEmpty && inline.exceptAll(fs).isEmpty
+        fs.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(fs).isEmpty
       case None => false
     }
     Seq(("pq_state", same)).toDF("variant", "state_equals_inline")
@@ -548,15 +549,16 @@ object LlmQueries {
 
   /** [[annPqStateGate]] for the COMPOSED index: IVF centroids + lists
     * and PQ books + codes (the four artifacts a FAISS-style store
-    * persists), queried from state vs the inline [[Similarity.ivfPqTopK]]. */
+    * persists), queried from state vs a second build in
+    * [[Similarity.ivfPqTopK]]. */
   def annIvfPqStateGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val inline = simTopKIvfPq(spark, dir)
+    val rebuilt = simTopKIvfPq(spark, dir)
     val same = (Similarity.ivfIndexState(e), Similarity.pqIndexState(e)) match {
       case (Some((cents, lists)), Some((books, codes))) =>
         val fs = Similarity.ivfPqTopKFromState(e, cents, lists, books, codes)
-        fs.exceptAll(inline).isEmpty && inline.exceptAll(fs).isEmpty
+        fs.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(fs).isEmpty
       case _ => false
     }
     Seq(("ivfpq_state", same)).toDF("variant", "state_equals_inline")
@@ -806,7 +808,7 @@ object LlmQueries {
     "llm_sim_topk_pq" -> (simTopKPqGate _),
     "llm_sim_topk_ivfpq" -> (simTopKIvfPqGate _),
     // build-once/query-from-state split for the PQ index: from-state
-    // verdicts must equal the inline path bit-for-bit
+    // verdicts must equal a second build's bit-for-bit
     "llm_ann_pq_state" -> (annPqStateGate _),
     "llm_ann_ivfpq_state" -> (annIvfPqStateGate _),
     "llm_ann_sweep" -> (annIvfSweep _),

@@ -412,7 +412,14 @@ final class Store(val spark: SparkSession, val root: String) {
       .partitionBy("part")
     (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w)
       .parquet(stagingDir.toString)
+    registerFiles(moveStaged(stagingDir))
+  }
 
+  /** Rename the parquet files a staged `partitionBy("part")` write left
+    * under `stagingDir` into their `data/part=…` directories, then drop
+    * the staging dir. Returns the moved files' destinations, which the
+    * caller registers in the catalog. */
+  private def moveStaged(stagingDir: Path): Seq[Path] = {
     val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
     if (fs.exists(stagingDir)) {
       fs.listStatus(stagingDir).foreach { st =>
@@ -431,22 +438,7 @@ final class Store(val spark: SparkSession, val root: String) {
       }
       fs.delete(stagingDir, true)
     }
-    registerFiles(moved.toSeq)
-  }
-
-  /** All data files currently on disk (driver-side listing). */
-  def listDataFiles(): Seq[Path] = {
-    val dir = new Path(dataDir)
-    if (!fs.exists(dir)) return Nil
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith("."))
-        buf += f.getPath
-    }
-    buf.toSeq
+    moved.toSeq
   }
 
   /** Compact a partition's chunk files into ~`targetFileBytes` outputs,
@@ -479,23 +471,8 @@ final class Store(val spark: SparkSession, val root: String) {
       .sortWithinPartitions("ts", "seq")
       .write.mode(SaveMode.Overwrite).partitionBy("part")
       .parquet(stagingDir.toString)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    fs.listStatus(stagingDir).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith("part=")) {
-        val dest = new Path(dataDir, st.getPath.getName)
-        fs.mkdirs(dest)
-        fs.listStatus(st.getPath).foreach { f =>
-          val name = f.getPath.getName
-          if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_")) {
-            val destFile = new Path(dest, name)
-            Store.renameOrThrow(fs, f.getPath, destFile)
-            moved += destFile
-          }
-        }
-      }
-    }
-    fs.delete(stagingDir, true)
-    catalog.replace(files.toSet, entriesFor(moved.toSeq))
+    val moved = moveStaged(stagingDir)
+    catalog.replace(files.toSet, entriesFor(moved))
     files.foreach(f => fs.delete(new Path(f), false))
     moved.size
   }
@@ -585,34 +562,13 @@ final class Store(val spark: SparkSession, val root: String) {
       .parquet(entries.map(_.file): _*)
   }
 
-  /** Delete a set of files (TRUNCATE path) and drop them from the catalog;
-    * removes now-empty partition dirs. */
+  /** Delete a set of files (TRUNCATE path) and drop them from the catalog.
+    * Emptied partition directories stay: nothing lists `data/`, and a
+    * sweep of directories missing from the catalog would also delete a
+    * file a concurrent [[append]] has renamed in but not yet registered. */
   def deleteFiles(paths: Seq[String]): Unit = {
     if (paths.isEmpty) return
-    val set = paths.toSet
     paths.foreach(p => fs.delete(new Path(p), false))
-    catalog.replace(set, Nil)
-    // clean empty partition dirs; live dirs derive from the O(parts)
-    // summaries (the writer escapes part lines with the same
-    // ExternalCatalogUtils scheme partitionBy uses)
-    // BOTH sides fs-qualified: listStatus returns scheme-qualified paths
-    // (file:/...), a bare string build does not — compared raw, no live
-    // dir ever matched and the sweep deleted EVERY partition's directory
-    // (data loss for unrelated partitions; caught by the round-15
-    // TRUNCATE×lease soak)
-    val theFs = fs
-    val live = catalog.partSummaries().keysIterator.map { line =>
-      theFs.makeQualified(new Path(dataDir, "part=" +
-        org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(line))).toString
-    }.toSet
-    val dataPath = new Path(dataDir)
-    if (theFs.exists(dataPath)) {
-      theFs.listStatus(dataPath).foreach { st =>
-        if (st.isDirectory &&
-            !live.contains(theFs.makeQualified(st.getPath).toString))
-          theFs.delete(st.getPath, true)
-      }
-    }
+    catalog.replace(paths.toSet, Nil)
   }
 }

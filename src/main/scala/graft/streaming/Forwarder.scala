@@ -4,7 +4,7 @@ import graft.engine.{Engine, Tail}
 import graft.lql.Ast.{CreatePipe, LqlException}
 import org.apache.spark.sql.Row
 
-import java.io.{OutputStream, PrintStream}
+import java.io.{BufferedOutputStream, OutputStream, PrintStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
@@ -34,13 +34,15 @@ object Forwarder {
   }
 
   /** Syslog over TCP, one RFC5424-ish frame per event, newline-delimited
-    * (reference pkg/syslog/syslog.go). */
+    * (reference pkg/syslog/syslog.go). Frames are buffered: the socket
+    * sees one write per full buffer and one flush per batch, not one
+    * write per frame. */
   final class SyslogTcpSink(host: String, port: Int,
       facility: Int = Syslog.FacilityLocal6, severity: Int = Syslog.SeverityInfo,
       hostname: String = "localhost", nlRepl: Boolean = true, lenLimit: Int = 0)
     extends Sink {
     private lazy val socket = new Socket(host, port)
-    private lazy val os: OutputStream = socket.getOutputStream
+    private lazy val os: OutputStream = new BufferedOutputStream(socket.getOutputStream)
     def onEvents(events: Seq[Row]): Unit = {
       events.foreach { r =>
         val line = Syslog.format(facility, severity, r.getAs[Long]("ts"),
@@ -73,7 +75,9 @@ object Forwarder {
 
   /** Run the pump until `keepRunning` turns false. Creates the pipe when it
     * doesn't exist yet (EnsurePipe semantics, reference worker.go:135-152),
-    * resumes from `<store root>/forwarder/<name>.pos` when present. */
+    * resumes from `<store root>/forwarder/<name>.pos` when present. The
+    * sink is closed however the loop ends, a sink or query failure
+    * included (the failure still propagates). */
   def run(engine: Engine, pipeName: String, sink: Sink,
       from: Option[String] = None, where: Option[String] = None,
       limit: Int = 1000, waitTimeout: Duration = Duration.ofSeconds(10),
@@ -94,22 +98,23 @@ object Forwarder {
       if (Files.exists(posFile)) Some(Files.readString(posFile).trim).filter(_.nonEmpty)
       else None
 
-    while (keepRunning()) {
-      val posClause = pos.map(p => s""" POSITION "$p"""").getOrElse("")
-      val lql = s"SELECT FROM {$dest}$posClause LIMIT $limit"
-      val sel = engine.parse(lql) match { case s: graft.lql.Ast.Select => s; case _ => return }
-      val (rows, tok) = Tail.queryWait(engine, sel, waitTimeout, poll)
-      if (rows.nonEmpty) {
-        sink.onEvents(rows.toSeq)
-        // position saved only after the sink accepted the batch
-        tok.foreach { t =>
-          Files.createDirectories(posFile.getParent)
-          Files.writeString(posFile, t)
-          pos = Some(t)
+    try {
+      while (keepRunning()) {
+        val posClause = pos.map(p => s""" POSITION "$p"""").getOrElse("")
+        val lql = s"SELECT FROM {$dest}$posClause LIMIT $limit"
+        val sel = engine.parse(lql) match { case s: graft.lql.Ast.Select => s; case _ => return }
+        val (rows, tok) = Tail.queryWait(engine, sel, waitTimeout, poll)
+        if (rows.nonEmpty) {
+          sink.onEvents(rows.toSeq)
+          // position saved only after the sink accepted the batch
+          tok.foreach { t =>
+            Files.createDirectories(posFile.getParent)
+            Files.writeString(posFile, t)
+            pos = Some(t)
+          }
         }
       }
-    }
-    sink.close()
+    } finally sink.close()
   }
 }
 

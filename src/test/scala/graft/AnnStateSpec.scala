@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The PQ index build-once/query-from-state split: the state tables must
-  * survive a REAL parquet round trip and reproduce the inline path's
-  * verdicts bit-for-bit (training is deterministic, so any divergence is
-  * a state-schema or rebuild bug, not noise).
+  * survive a REAL parquet round trip and reproduce the verdicts of a
+  * fresh build (`pqTopK` / `ivfPqTopK` rebuild the state and query it)
+  * bit-for-bit — training is deterministic, so any divergence is a
+  * state-schema or rebuild bug, not noise.
   */
 class AnnStateSpec extends AnyFunSuite {
 

@@ -90,6 +90,23 @@ class EngineSpec extends AnyFunSuite {
     assert(e.execute("SHOW PARTITIONS").collect().isEmpty)
   }
 
+  test("TRUNCATE keeps a file an append has moved into data/ but not yet registered") {
+    val e = freshEngine()
+    ingest(e, Map("app" -> "d"), 1000000000L, 10)
+    // the window inside Store.append between the rename into data/ and
+    // the catalog commit: a parquet file in a partition dir the catalog
+    // does not know yet
+    val registered = e.store.catalog.entriesForPart("app=d").head.file
+    val pendingDir = new java.io.File(s"${e.store.dataDir}/part=app%3Dpending")
+    assert(pendingDir.mkdirs())
+    val pending = new java.io.File(pendingDir, "part-00000-pending.c000.snappy.parquet")
+    Files.copy(java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(registered).toUri.getPath),
+      pending.toPath)
+    e.execute("TRUNCATE {app=d} MAXSIZE 1")
+    assert(e.select("SELECT FROM {app=d} LIMIT 100").count() == 0)
+    assert(pending.exists(), "TRUNCATE deleted a file of another, not yet registered partition")
+  }
+
   test("salted append spreads a hot partition over several files, same results") {
     import spark.implicits._
     val e = freshEngine()

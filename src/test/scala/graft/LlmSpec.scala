@@ -401,7 +401,9 @@ class LlmSpec extends AnyFunSuite {
     // every ivfpq result must come from an IVF-probed list — the ADC
     // stage can only re-rank the coarse survivors, never resurrect a
     // pruned vector
-    val cand = Similarity.ivfCandidates(emb, 10, 16, 4, 5, 4096)
+    val Some((cents, lists)) = Similarity.ivfIndexState(emb)
+    val cand = Similarity.ivfCandidates(emb, Similarity.centroidsFromState(cents),
+        lists, numQueries = 10, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val out = Similarity.ivfPqTopK(emb, numQueries = 10, k = 5)
       .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -412,7 +414,7 @@ class LlmSpec extends AnyFunSuite {
   test("pqCodes: one code row per vector, every code inside its codebook") {
     val m = 8
     val ksub = 32
-    val codes = Similarity.pqCodes(emb, m = m, ksub = ksub).collect()
+    val codes = Similarity.pqIndexState(emb, m = m, ksub = ksub).get._2.collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     val ids = emb.select(col("vec_id").cast("long")).collect().map(_.getLong(0)).toSet
     assert(codes.keySet == ids, "code table must be row-for-row with the corpus")
@@ -427,11 +429,11 @@ class LlmSpec extends AnyFunSuite {
     assert(distinctPerSub.forall(_ > 1), "a subspace collapsed to one centroid")
     // determinism: re-encoding yields the identical table (seedless
     // trainer, fixed sample order)
-    val again = Similarity.pqCodes(emb, m = m, ksub = ksub).collect()
+    val again = Similarity.pqIndexState(emb, m = m, ksub = ksub).get._2.collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
     assert(codes.keySet == again.keySet &&
       codes.forall { case (id, cd) => cd.sameElements(again(id)) },
-      "pqCodes must be deterministic across invocations")
+      "the PQ code table must be deterministic across builds")
   }
 
   test("sq8Dequant: reconstruction stays inside the embedQuantize error bound") {

@@ -370,4 +370,40 @@ class TailForwarderSpec extends AnyFunSuite {
       keepRunning = { val r = new AtomicInteger(0); () => r.incrementAndGet() <= 2 })
     assert(collected.length == before)
   }
+
+  test("forwarder closes the sink when it throws and keeps the saved position") {
+    val e = freshEngine()
+    val posFile = java.nio.file.Paths.get(s"${e.store.root}/forwarder/fwx.pos")
+    val got = ArrayBuffer.empty[String]
+    val good = new Forwarder.Sink {
+      def onEvents(events: Seq[Row]): Unit = got ++= events.map(_.getAs[String]("msg"))
+    }
+    def bounded(rounds: Int): () => Boolean = {
+      val r = new AtomicInteger(0); () => r.incrementAndGet() <= rounds
+    }
+    ingest(e, Map("app" -> "fx"), 1000000000L, 3, "a")
+    Forwarder.run(e, "fwx", good, from = Some("{app=fx}"), keepRunning = () => false)
+    e.pipes.processAllAvailable()
+    Forwarder.run(e, "fwx", good, waitTimeout = Duration.ofMillis(300),
+      poll = Duration.ofMillis(100), keepRunning = bounded(3))
+    assert(got.toSeq == (0 until 3).map(i => s"a$i"))
+    val saved = Files.readString(posFile)
+
+    ingest(e, Map("app" -> "fx"), 50000000000L, 3, "b")
+    e.pipes.processAllAvailable()
+    val closed = new AtomicBoolean(false)
+    val failing = new Forwarder.Sink {
+      def onEvents(events: Seq[Row]): Unit = throw new java.io.IOException("sink down")
+      override def close(): Unit = closed.set(true)
+    }
+    val ex = intercept[java.io.IOException] {
+      Forwarder.run(e, "fwx", failing, waitTimeout = Duration.ofMillis(300),
+        poll = Duration.ofMillis(100), keepRunning = bounded(10))
+    }
+    e.pipes.stopAll()
+    assert(ex.getMessage == "sink down")
+    assert(closed.get(), "the sink must be closed when the pump fails")
+    assert(Files.readString(posFile) == saved,
+      "the position must not advance past a batch the sink rejected")
+  }
 }
