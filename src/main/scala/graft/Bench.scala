@@ -40,8 +40,8 @@ object Bench {
     val docsWarm = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
     graft.llm.Dedup.nearDuplicates(docsWarm).count()
     graft.llm.SimHash.fingerprints(docsWarm).count()
-    // JIT/classload warm-up of the graft-store batch scan path (parquet-mr
-    // record assembly + DSv2 row conversion): a bounded slice, so the first
+    // JIT/classload warm-up of the graft-store batch scan path (catalog
+    // file index + Spark's parquet scan): a bounded slice, so the first
     // connector-backed entry times its query, not one-off class loading
     spark.read.format("graft-store")
       .option("root", graft.store.EventStore.storeRoot(sfDir))

@@ -12,7 +12,7 @@ import graft.queries.{AdminQueries, Analytics, LlmQueries, LqlQueries, StreamQue
   *    the LQL engine (parse → catalog prune → filter → order → position
   *    → project) over the materialized LogEvent store, plus store
   *    lifecycle (ingest parsers, pipes, forwarder, truncate, compaction,
-  *    tail-follow, the public DSv2 connector);
+  *    tail-follow, the public graft-store connector);
   *  - `q*`     — analytics over the synthetic star schema: TPC-H-style
   *    joins/aggregates, as-of + interval joins, sketch gates, ROLLUP,
   *    gap-fill resampling, co-located bucketed joins;

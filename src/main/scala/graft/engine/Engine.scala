@@ -73,8 +73,8 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
   def showPipes(s: ShowPipes): DataFrame = {
     import spark.implicits._
     val names = pipes.list().map(_.name)
-    names.drop(s.offset.getOrElse(0L).toInt)
-      .take(s.limit.map(_.toInt).getOrElse(Int.MaxValue))
+    names.drop(intArg("OFFSET", s.offset.getOrElse(0L)))
+      .take(s.limit.map(intArg("LIMIT", _)).getOrElse(Int.MaxValue))
       .toDF("pipe")
   }
 
@@ -174,13 +174,14 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
           throw LqlException(s"position must be head|tail|<continuation token>, got '$tok'")))
       case _ => None
     }
-    val offset0 = sel.offset.getOrElse(0L)
+    val offset = intArg("OFFSET", sel.offset.getOrElse(0L))
+    sel.limit.foreach(l => if (l < 0) throw LqlException(s"LIMIT must not be negative, got $l"))
     // a forward read from a continuation token never needs chunks that end
     // strictly before the key's ts — so each page (and each tail-follow
     // poll) scans only chunks at/after its position, independent of how
     // much history the partition holds
     val readRange = keyOpt match {
-      case Some(k) if offset0 >= 0 =>
+      case Some(k) if offset >= 0 =>
         Some((math.max(tsRange.map(_._1).getOrElse(0L), k.ts),
           tsRange.map(_._2).getOrElse(Long.MaxValue)))
       case _ => tsRange
@@ -194,12 +195,11 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
     }
 
     val limit = math.min(sel.limit.getOrElse(MaxLimit.toLong), MaxLimit.toLong).toInt
-    val offset = offset0
 
     val page: DataFrame = posNorm match {
       case None | Some("head") =>
         val fwd = df.orderBy(ascOrder: _*)
-        val skipped = if (offset > 0) fwd.offset(offset.toInt) else fwd // negative from head clamps to head
+        val skipped = if (offset > 0) fwd.offset(offset) else fwd // negative from head clamps to head
         skipped.limit(limit)
 
       case Some("tail") =>
@@ -207,7 +207,7 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
         else {
           // last |offset| records, read forward from there (reference
           // cursor.go:244-285 backward walk + forward read)
-          val lastN = df.orderBy(descOrder: _*).limit((-offset).toInt)
+          val lastN = df.orderBy(descOrder: _*).limit(-offset)
           lastN.orderBy(ascOrder: _*).limit(limit)
         }
 
@@ -215,10 +215,10 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
         val key = keyOpt.get
         if (offset >= 0) {
           val fwd = df.where(afterKey(key)).orderBy(ascOrder: _*)
-          (if (offset > 0) fwd.offset(offset.toInt) else fwd).limit(limit)
+          (if (offset > 0) fwd.offset(offset) else fwd).limit(limit)
         } else {
           // shift position back |offset| records, then read forward
-          val back = df.where(upToKey(key)).orderBy(descOrder: _*).limit((-offset).toInt)
+          val back = df.where(upToKey(key)).orderBy(descOrder: _*).limit(-offset)
           val fwd = df.where(afterKey(key))
           back.unionByName(fwd).orderBy(ascOrder: _*).limit(limit)
         }
@@ -226,6 +226,13 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
 
     (project(page, sel, parts), page.select(col("ts"), col("part"), col("seq")))
   }
+
+  /** An LQL integer Spark takes as an Int: a magnitude above
+    * `Int.MaxValue` is an error, never a silent wrap. */
+  private def intArg(name: String, v: Long): Int =
+    if (v > Int.MaxValue || v < -Int.MaxValue)
+      throw LqlException(s"$name $v is out of range (at most ${Int.MaxValue} in magnitude)")
+    else v.toInt
 
   /** Mint the continuation token from the last row of the page (an action).
     * Returns None when the page is empty. */

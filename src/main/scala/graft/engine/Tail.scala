@@ -12,7 +12,7 @@ import java.time.Duration
   *    empty, long-poll (re-plan from the same position) until data arrives
   *    or the timeout lapses (reference api/querier.go:59-63,
   *    pkg/backend/querier.go:109-118 WaitNewData). Re-planning sees new
-  *    data because the store re-lists parquet files.
+  *    data because each plan takes its file list from the catalog.
   *  - [[selectLoop]] = the client `Select` helper (reference
   *    api/client.go:40-75): repeat from the NextQueryRequest; bounded mode
   *    decrements the remaining limit and stops at EOF, stream mode runs

@@ -109,6 +109,15 @@ final class Parser(clock: () => Instant) {
       case t => fail(s"expected a number, got '${t.text}'")
     }
 
+    /** An integer the AST holds as an Int: rejected, not wrapped, when its
+      * magnitude exceeds `Int.MaxValue`. */
+    def parseInt32(): Int = {
+      val v = parseInt64()
+      if (v > Int.MaxValue || v < -Int.MaxValue)
+        fail(s"integer $v is out of range (at most ${Int.MaxValue} in magnitude)")
+      v.toInt
+    }
+
     def parseRange(): TimeRange = {
       val bracket = peek match {
         case TOp("[") => pos += 1; true
@@ -238,8 +247,8 @@ final class Parser(clock: () => Instant) {
     def parseShow(): Lql =
       if (eatKw("PARTITIONS")) {
         val src = parseSourceOpt()
-        val off = if (eatKw("OFFSET")) Some(parseInt64().toInt) else None
-        val lim = if (eatKw("LIMIT")) Some(parseInt64().toInt) else None
+        val off = if (eatKw("OFFSET")) Some(parseInt32()) else None
+        val lim = if (eatKw("LIMIT")) Some(parseInt32()) else None
         ShowPartitions(src, off, lim)
       } else if (eatKw("PIPES")) {
         val off = if (eatKw("OFFSET")) Some(parseInt64()) else None

@@ -379,7 +379,7 @@ object AdminQueries {
     out
   }
 
-  /** The `graft-store` DataSource V2 stream (readStream → AvailableNow →
+  /** The `graft-store` connector's stream (readStream → AvailableNow →
     * foreachBatch): phase1 drains the initial content, phase2 resumes from
     * the same checkpoint after more ingest and must see ONLY the new rows —
     * the catalog-cursor offset contract observable through the public

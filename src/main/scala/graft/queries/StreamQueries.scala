@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
 object StreamQueries {
 
   /** Batch DataFrame over the events LogEvent store through the public
-    * `graft-store` DataSource V2 connector (also exercising its batch
-    * catalog-exact planning). */
+    * `graft-store` connector (also exercising its batch planning over the
+    * catalog file index). */
   private def storeDf(spark: SparkSession, dir: String): DataFrame = {
     EventStore.engine(spark, dir) // ensure the store is built
     spark.read.format("graft-store")

@@ -1,24 +1,18 @@
 package graft.sources
 
-import graft.lql.Ast.{LqlException, Select}
-import graft.lql.{Parser, TagsCompiler}
-import graft.model.Model
-import graft.store.{Catalog, Store}
+import graft.lql.Ast.{LqlException, Select, Source => LqlSource}
+import graft.lql.Parser
+import graft.store.{Store, StoreFileIndex}
 import graft.streaming.PipeService
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.{DataFrame, GraftColumn, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSourceProvider}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** DataSource V2 connector exposing a graft [[Store]] as a Spark table:
+/** The `graft-store` connector: a graft [[Store]] as a Spark source, in
+  * batch and in streaming mode.
   *
   * {{{
   *   spark.read.format("graft-store").option("root", root).load()
@@ -26,351 +20,245 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .option("from", "{name=error}").load()
   * }}}
   *
-  * The batch side reads the catalog's exact file list (no directory
-  * listing); the streaming side is the Spark-native form of the reference's
-  * stream-mode client loop (reference api/client.go:40-75) and WriteEvent
-  * subscription (reference pkg/partition/partition.go:175-206): offsets are
-  * per-partition `seq` cursors, and each micro-batch is planned from
-  * catalog entries whose footer `maxSeq` exceeds the cursor — discovery
-  * is O(parts) per trigger (offset computation reads the persisted
-  * per-part summary sidecars) and batch planning is O(changed parts'
-  * hash shards), never an O(total chunks) fold or an O(total files)
-  * listing (the scale property that made
-  * [[graft.streaming.PipeWorker]] drop Spark's file-stream source; this
-  * source packages the same contract behind the public `readStream` API,
-  * with checkpointed offsets and AvailableNow/processingTime triggers for
-  * free). At the 10^7-chunk design point a short-trigger pipe's poll
-  * walks ~10^4 summary lines, not 10^7 entries (CatalogScaleProbe pins
-  * the budget).
+  * Both modes read through the store's one read path: Spark's parquet scan
+  * over the catalog file index ([[StoreFileIndex]], [[Store.relation]]) —
+  * the provider shape Delta Lake's V1 source uses (a `RelationProvider`
+  * plus a `StreamSourceProvider`). The index prunes partitions on `part`
+  * predicates and chunks on `ts` predicates against the catalog's
+  * per-chunk [minTs, maxTs]; Spark prunes columns and reads the files.
+  * Pushdown only skips files: Spark re-applies every predicate.
+  *
+  * Batch: the relation covers the partitions the FROM selects in the
+  * O(parts) catalog summaries; entries load only for the parts that pass
+  * the query's partition filters, so `.where(col("part") === x)` parses
+  * x's hash shard only. No directory is listed.
+  *
+  * Streaming ([[GraftStoreStream]]) is the Spark-native form of the
+  * reference's stream-mode client loop (reference api/client.go:40-75)
+  * and WriteEvent subscription (reference pkg/partition/partition.go:
+  * 175-206): offsets are per-partition `seq` cursors, and each micro-batch
+  * reads the catalog entries whose footer `maxSeq` exceeds the cursor —
+  * discovery is O(parts) per trigger (offsets come from the persisted
+  * per-part summary sidecars) and batch planning is O(changed parts' hash
+  * shards), never an O(total chunks) fold or an O(total files) listing
+  * (the scale property that made [[graft.streaming.PipeWorker]] drop
+  * Spark's file-stream source; this source packages the same contract
+  * behind the public `readStream` API, with checkpointed offsets and
+  * AvailableNow/processingTime triggers for free). At the 10^7-chunk
+  * design point a short-trigger pipe's poll walks ~10^4 summary lines, not
+  * 10^7 entries (CatalogScaleProbe pins the budget).
   *
   * Exactly-once batch planning: an offset only includes seqs at or below
   * [[Store.safeSeqWatermark]], and any append started AFTER an offset was
   * computed takes a fresh epoch whose seqs exceed every seq visible then,
   * so the row set of `(start, end]` is stable no matter when it is planned.
   * Compaction rewrites keep row seqs (rewritten rows sit at or below the
-  * cursor and are filtered in the reader), so maintenance never re-emits.
-  * TRUNCATE deletes rows by intent; the one documented edge is the pipes'
-  * cursor contract: truncating an entire store and restarting the JVM
-  * reseeds epochs low, stranding checkpoints above the new seqs.
+  * cursor and are filtered out), so maintenance never re-emits. TRUNCATE
+  * deletes rows by intent; the one documented edge is the pipes' cursor
+  * contract: truncating an entire store and restarting the JVM reseeds
+  * epochs low, stranding checkpoints above the new seqs.
   *
   * Options: `root` (required) — the store root; `from` (optional) — an LQL
   * tags source (`{k=v}` subset or a tags expression) selecting source
   * partitions driver-side, so non-matching partitions' files are never
   * read; pipe destinations (`logrange.pipe=...`) are excluded unless
-  * matched explicitly by a `{logrange.pipe=<name>}` literal, mirroring the
-  * pipe cascade guard.
+  * matched explicitly by a `{logrange.pipe=<name>}` literal
+  * ([[PipeService.sourceParts]], the pipes' cascade guard).
   */
-final class GraftStoreSource extends TableProvider with DataSourceRegister {
+final class GraftStoreSource extends DataSourceRegister with RelationProvider
+    with StreamSourceProvider {
+  import GraftStoreSource._
+
   override def shortName(): String = "graft-store"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = Model.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val root = properties.get("root")
-    if (root == null || root.isEmpty)
-      throw LqlException("graft-store: required option 'root' is missing")
-    new GraftStoreTable(root, Option(properties.get("from")).filter(_.nonEmpty))
+
+  override def createRelation(sqlContext: SQLContext,
+      parameters: Map[String, String]): BaseRelation = {
+    val store = open(sqlContext.sparkSession, parameters)
+    val sums = store.catalog.partSummaries()
+    val parts = PipeService.sourceParts(sums.keysIterator, from(parameters),
+      explicitPipe = true).sorted
+    store.relation(new StoreFileIndex(store.root, parts, store.catalog.entriesForPart,
+      parts.iterator.map(sums(_).sizeBytes).sum))
   }
+
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) = {
+    open(sqlContext.sparkSession, parameters)
+    (shortName(), ReadSchema)
+  }
+
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source =
+    new GraftStoreStream(open(sqlContext.sparkSession, parameters), from(parameters))
 }
 
-final class GraftStoreTable(root: String, from: Option[String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-store($root${from.fold("")(f => s", from=$f")})"
-  override def schema(): StructType = Model.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftStoreScanBuilder(root, from)
-}
+object GraftStoreSource {
+  /** The connector's columns: [[graft.model.Model.schema]] as the store
+    * reads it. */
+  val ReadSchema: StructType = Store.DataSchema.add("part", StringType)
 
-/** Pushdown seams of the connector — the public-API twin of what the LQL
-  * engine does natively (catalog footer stats replacing the reference's
-  * tmindex, reference pkg/tmindex/ckindex.go):
-  *
-  *  - column pruning: only requested columns are decoded; the pruned
-  *    schema reaches the parquet reader as a projection, so unneeded
-  *    column chunks (msg bytes dominate) are never read;
-  *  - `ts` range filters prune whole FILES driver-side against the
-  *    catalog's per-chunk [minTs, maxTs] — at 100 TB a dashboard's
-  *    "last hour" query plans only the chunks overlapping the hour —
-  *    and the surviving files get a parquet record filter whose
-  *    row-group/page statistics skip within the file;
-  *  - `part` equality/IN prunes partitions driver-side (same effect as
-  *    the `from` option, but reachable from a plain `.where`).
-  *
-  * Every filter is also RE-APPLIED by Spark (pushFilters returns all of
-  * them as residual), so pushdown can only skip data the predicate
-  * excludes — never change results.
-  */
-final class GraftStoreScanBuilder(root: String, from: Option[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-
-  private var required: StructType = Model.schema
-  private var tsLo = Long.MinValue
-  private var tsHi = Long.MaxValue
-  private var partsEq: Option[Set[String]] = None
-  private var pushed = Array.empty[org.apache.spark.sql.sources.Filter]
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    val accepted = filters.filter {
-      case GreaterThan("ts", v: Long) =>
-        if (v < Long.MaxValue) tsLo = math.max(tsLo, v + 1); true
-      case GreaterThanOrEqual("ts", v: Long) => tsLo = math.max(tsLo, v); true
-      case LessThan("ts", v: Long) =>
-        if (v > Long.MinValue) tsHi = math.min(tsHi, v - 1); true
-      case LessThanOrEqual("ts", v: Long) => tsHi = math.min(tsHi, v); true
-      case EqualTo("ts", v: Long) =>
-        tsLo = math.max(tsLo, v); tsHi = math.min(tsHi, v); true
-      case EqualTo("part", v: String) =>
-        partsEq = Some(partsEq.fold(Set(v))(_.intersect(Set(v)))); true
-      case In("part", vs) if vs.forall(_.isInstanceOf[String]) =>
-        val s = vs.map(_.asInstanceOf[String]).toSet
-        partsEq = Some(partsEq.fold(s)(_.intersect(s))); true
-      case _ => false
+  private def open(spark: SparkSession, parameters: Map[String, String]): Store =
+    parameters.get("root").filter(_.nonEmpty) match {
+      case Some(root) => new Store(spark, root)
+      case None => throw LqlException("graft-store: required option 'root' is missing")
     }
-    pushed = accepted
-    filters // all residual: Spark re-applies, pushdown is prune-only
-  }
 
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan =
-    new GraftStoreScan(root, from, required, tsLo, tsHi, partsEq)
-}
-
-final class GraftStoreScan(root: String, from: Option[String],
-    required: StructType = Model.schema,
-    tsLo: Long = Long.MinValue, tsHi: Long = Long.MaxValue,
-    partsEq: Option[Set[String]] = None) extends Scan {
-
-  // FROM-option predicate + cascade guard, evaluated driver-side against
-  // catalog tag lines only (the same pruning as PipeWorker.triggerOnce)
-  private val pred: Map[String, String] => Boolean = {
-    val src = from.map { f =>
+  private def from(parameters: Map[String, String]): Option[LqlSource] =
+    parameters.get("from").filter(_.nonEmpty).map { f =>
       new Parser(() => java.time.Instant.now()).parse(s"SELECT FROM $f LIMIT 1") match {
         case Right(s: Select) => s.source.getOrElse(
           throw LqlException(s"graft-store: empty 'from' source: $f"))
         case other => throw LqlException(s"graft-store: bad 'from' option '$f': $other")
       }
     }
-    val explicitPipe = src.exists(_.render.contains(PipeService.PipeTag))
-    val p = TagsCompiler.compile(src)
-    tags => (explicitPipe || !tags.contains(PipeService.PipeTag)) && p(tags)
-  }
+}
 
-  private def hadoopConf: Configuration =
-    SparkSession.active.sparkContext.hadoopConfiguration
-  private def catalog: Catalog = Catalog(hadoopConf, root)
+/** The micro-batch side of the connector: a V1 streaming source whose
+  * offsets are [[GraftOffset]] seq cursors. */
+final class GraftStoreStream(store: Store, from: Option[LqlSource])
+    extends Source with SupportsTriggerAvailableNow {
 
-  private val tagsCache = scala.collection.mutable.HashMap.empty[String, Map[String, String]]
-  private def matches(line: String): Boolean =
-    partsEq.forall(_.contains(line)) &&
-      pred(tagsCache.getOrElseUpdate(line, Model.parseTags(line).getOrElse(Map.empty)))
+  override def schema: StructType = GraftStoreSource.ReadSchema
 
-  /** Catalog-stat file pruning: a chunk wholly outside [tsLo, tsHi] can
-    * contain no qualifying row. */
-  private def tsOverlaps(e: graft.store.CatEntry): Boolean =
-    e.maxTs >= tsLo && e.minTs <= tsHi
+  /** End offset pinned at Trigger.AvailableNow start. Without this
+    * contract Spark falls back to single-batch Trigger.Once semantics,
+    * which never runs the trailing no-data batch — so watermark-gated
+    * append output (windows, sessions) would not flush until the NEXT
+    * run's data batch. */
+  private var availableNowEnd: Option[GraftOffset] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(computeLatestOffset())
 
-  /** `columnar = true` only for batch scans: batch partitions are always
-    * whole files (no seq cursor bounds), so the vectorized path needs no
-    * per-row filtering; streaming micro-batches carry (lo, hi] seq ranges
-    * and use the row materializer. The flag is scan-level, so a scan's
-    * partitions are uniformly columnar or uniformly row-based (Spark
-    * rejects mixed scans). */
-  private def readerFactory(columnar: Boolean): GraftReaderFactory =
-    GraftReaderFactory(
-      new SerializableHadoopConf(GraftColumnarReader.seedSessionConfs(
-        hadoopConf, SparkSession.active)),
-      required.fieldNames, tsLo, tsHi, columnar)
-
-  override def readSchema(): StructType = required
-  override def description(): String = {
-    val tsDesc =
-      if (tsLo == Long.MinValue && tsHi == Long.MaxValue) ""
-      else s", ts=[${tsLo}..${tsHi}]"
-    s"graft-store root=$root from=${from.getOrElse("*")}" +
-      s", columns=[${required.fieldNames.mkString(",")}]$tsDesc" +
-      partsEq.fold("")(p => s", parts=${p.mkString("|")}")
-  }
-
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      // exact-part pushdown prunes through the per-part index — O(selected
-      // parts), independent of total catalog size; tag-predicate FROMs
-      // evaluate the predicate against the O(parts) summary KEYS first and
-      // parse only the shards holding matching parts (shard routing), so
-      // a selective FROM never pays the O(chunks) full parse either
-      val candidates = partsEq match {
-        case Some(parts) =>
-          val idx = catalog.entriesForParts(parts)
-          parts.toVector.sorted.flatMap(p => idx.getOrElse(p, Vector.empty))
-        case None =>
-          val parts = catalog.partSummaries().keysIterator
-            .filter(matches).toVector.sorted
-          val idx = catalog.entriesForParts(parts)
-          parts.flatMap(p => idx.getOrElse(p, Vector.empty))
+  /** Highest cursor ever handed out (or replayed from a checkpoint)
+    * per partition in this run. latestOffset max-merges into this, so
+    * a cursor can never regress or drop out of the offset even when a
+    * compaction merges a consumed file with a deferred higher-epoch
+    * one while a lower-epoch append is in flight (which would
+    * otherwise hide the partition behind the safe-seq watermark for a
+    * trigger and re-emit consumed rows once it resolved). */
+  private val floor = scala.collection.mutable.HashMap.empty[String, Long]
+  private def raiseFloor(cursors: Map[String, Long]): Unit =
+    floor.synchronized {
+      cursors.foreach { case (p, s) =>
+        if (s > floor.getOrElse(p, Long.MinValue)) floor(p) = s
       }
-      candidates.filter(e => matches(e.part) && tsOverlaps(e))
-        .map(e => GraftInputPartition(e.file, e.part, -1L, Long.MaxValue)).toArray
     }
-    override def createReaderFactory(): PartitionReaderFactory =
-      readerFactory(columnar = true)
+
+  /** New data = catalog entries above the committed cursors, capped at
+    * the safe seq watermark so a still-running lower-epoch append can
+    * never be stranded below an advanced offset (the PipeWorker cursor
+    * contract), and floored at every cursor previously handed out so
+    * offsets are monotonic per partition. */
+  private def latest(): GraftOffset = availableNowEnd.getOrElse(computeLatestOffset())
+  override def getOffset: Option[Offset] = Some(latest())
+
+  /** Admission-control form: max-merged with `start` (null before the
+    * first batch), so a cursor can never regress below the last
+    * committed offset even across a restart (the floor map alone only
+    * covers this run). ReadLimit is ignored — a trigger always admits up
+    * to the safe watermark. */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    val cur = latest().cursors
+    val base = Option(start).fold(Map.empty[String, Long])(GraftOffset.of(_).cursors)
+    val merged = (cur.keySet ++ base.keySet).iterator.map { p =>
+      p -> math.max(cur.getOrElse(p, Long.MinValue),
+        base.getOrElse(p, Long.MinValue))
+    }.toMap
+    GraftOffset(merged)
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new MicroBatchStream with SupportsTriggerAvailableNow {
-
-      /** End offset pinned at Trigger.AvailableNow start. Without this
-        * contract Spark falls back to single-batch Trigger.Once semantics,
-        * which never runs the trailing no-data batch — so watermark-gated
-        * append output (windows, sessions) would not flush until the NEXT
-        * run's data batch. */
-      private var availableNowEnd: Option[Offset] = None
-      override def prepareForTriggerAvailableNow(): Unit =
-        availableNowEnd = Some(computeLatestOffset())
-
-      /** Highest cursor ever handed out (or replayed from a checkpoint)
-        * per partition in this run. latestOffset max-merges into this, so
-        * a cursor can never regress or drop out of the offset even when a
-        * compaction merges a consumed file with a deferred higher-epoch
-        * one while a lower-epoch append is in flight (which would
-        * otherwise hide the partition behind the safe-seq watermark for a
-        * trigger and re-emit consumed rows once it resolved). */
-      private val floor = scala.collection.mutable.HashMap.empty[String, Long]
-      private def raiseFloor(cursors: Map[String, Long]): Unit =
-        floor.synchronized {
-          cursors.foreach { case (p, s) =>
-            if (s > floor.getOrElse(p, Long.MinValue)) floor(p) = s
-          }
-        }
-
-      override def initialOffset(): Offset = GraftOffset(Map.empty)
-
-      /** New data = catalog entries above the committed cursors, capped at
-        * the safe seq watermark so a still-running lower-epoch append can
-        * never be stranded below an advanced offset (the PipeWorker cursor
-        * contract), and floored at every cursor previously handed out so
-        * offsets are monotonic per partition. */
-      override def latestOffset(): Offset =
-        availableNowEnd.getOrElse(computeLatestOffset())
-
-      /** Admission-control form: max-merged with `start`, so a cursor can
-        * never regress below the last committed offset even across a
-        * restart (the floor map alone only covers this run). ReadLimit is
-        * ignored — a trigger always admits up to the safe watermark. */
-      override def latestOffset(start: Offset,
-          limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
-        val latest = latestOffset().asInstanceOf[GraftOffset].cursors
-        val base = start.asInstanceOf[GraftOffset].cursors
-        val merged = (latest.keySet ++ base.keySet).iterator.map { p =>
-          p -> math.max(latest.getOrElse(p, Long.MinValue),
-            base.getOrElse(p, Long.MinValue))
-        }.toMap
-        GraftOffset(merged)
+  /** O(parts) per trigger, never O(chunks): cursors come from the
+    * persisted per-part summaries ([[graft.store.Catalog.partSummaries]] —
+    * the admin plane's sidecar pattern applied to discovery). The fast
+    * path is one summary row per matching part: when the part's
+    * summary `maxSeq` sits at or below its safe watermark (the
+    * quiescent case — no in-flight append targets it), that maxSeq IS
+    * the cursor. Only a part with an in-flight append above the
+    * watermark (bounded by concurrent writers, not catalog size) —
+    * or one whose sidecar predates the `minMaxSeq` field — falls
+    * back to its OWN hash shard via [[graft.store.Catalog.entriesForPart]].
+    * Reference analog: O(new writes) write-event fanout
+    * (pkg/pipe/service.go:271-347). */
+  private def computeLatestOffset(): GraftOffset = {
+    val cur = scala.collection.mutable.HashMap.empty[String, Long]
+    def seqless(p: String): Nothing =
+      throw LqlException(s"graft-store: partition $p has chunks with no " +
+        "footer seq; seq-less files cannot be streamed (rebuild the " +
+        "store, or read it in batch mode)")
+    // summaries FIRST, snapshot SECOND: the snapshot must be at least
+    // as fresh as the catalog view it gates (Store.inFlightSnapshot's
+    // ordering contract) — and ONE snapshot serves every part's
+    // watermark, so a shared FileInFlightRegistry is listed once per
+    // trigger, not once per partition
+    val sums = store.catalog.partSummaries()
+    val snap = Store.inFlightSnapshot(store.root)
+    // replay of the per-entry cursor fold, restricted to ONE part's
+    // shard — the precise path for in-flight/legacy-sidecar parts;
+    // takes its own FRESH watermark after materializing the entries
+    // (they may be newer than `sums`/`snap`)
+    def preciseCursor(p: String): Unit = {
+      val es = store.catalog.entriesForPart(p)
+      val safe = Store.watermarkFrom(Store.inFlightSnapshot(store.root), Some(p))
+      var best = -1L
+      es.foreach { e =>
+        if (e.maxSeq < 0) seqless(p)
+        if (e.maxSeq <= safe && e.maxSeq > best) best = e.maxSeq
       }
-
-      /** O(parts) per trigger, never O(chunks): cursors come from the
-        * persisted per-part summaries ([[Catalog.partSummaries]] — the
-        * admin plane's sidecar pattern applied to discovery). The fast
-        * path is one summary row per matching part: when the part's
-        * summary `maxSeq` sits at or below its safe watermark (the
-        * quiescent case — no in-flight append targets it), that maxSeq IS
-        * the cursor. Only a part with an in-flight append above the
-        * watermark (bounded by concurrent writers, not catalog size) —
-        * or one whose sidecar predates the `minMaxSeq` field — falls
-        * back to its OWN hash shard via [[Catalog.entriesForPart]].
-        * Reference analog: O(new writes) write-event fanout
-        * (pkg/pipe/service.go:271-347). */
-      private def computeLatestOffset(): Offset = {
-        val cur = scala.collection.mutable.HashMap.empty[String, Long]
-        def seqless(p: String): Nothing =
-          throw LqlException(s"graft-store: partition $p has chunks with no " +
-            "footer seq; seq-less files cannot be streamed (rebuild the " +
-            "store, or read it in batch mode)")
-        // summaries FIRST, snapshot SECOND: the snapshot must be at least
-        // as fresh as the catalog view it gates (Store.inFlightSnapshot's
-        // ordering contract) — and ONE snapshot serves every part's
-        // watermark, so a shared FileInFlightRegistry is listed once per
-        // trigger, not once per partition
-        val sums = catalog.partSummaries()
-        val snap = Store.inFlightSnapshot(root)
-        // replay of the per-entry cursor fold, restricted to ONE part's
-        // shard — the precise path for in-flight/legacy-sidecar parts;
-        // takes its own FRESH watermark after materializing the entries
-        // (they may be newer than `sums`/`snap`)
-        def preciseCursor(p: String): Unit = {
-          val es = catalog.entriesForPart(p)
-          val safe = Store.watermarkFrom(Store.inFlightSnapshot(root), Some(p))
-          var best = -1L
-          es.foreach { e =>
-            if (e.maxSeq < 0) seqless(p)
-            if (e.maxSeq <= safe && e.maxSeq > best) best = e.maxSeq
-          }
-          if (best >= 0) cur(p) = best
-        }
-        sums.foreach { case (p, s) =>
-          if (matches(p)) {
-            val safe = Store.watermarkFrom(snap, Some(p))
-            if (s.minMaxSeq == Long.MinValue) preciseCursor(p)
-            else if (s.minMaxSeq < 0) seqless(p)
-            else if (s.maxSeq <= safe) cur(p) = s.maxSeq
-            else preciseCursor(p)
-          }
-        }
-        floor.synchronized {
-          floor.foreach { case (p, s) =>
-            if (s > cur.getOrElse(p, Long.MinValue)) cur(p) = s
-          }
-        }
-        val off = GraftOffset(cur.toMap)
-        raiseFloor(off.cursors)
-        off
-      }
-
-      /** O(changed parts' shards) per trigger: only parts whose cursor
-        * ADVANCED (`h > l`) have their entries consulted, and each costs
-        * one memoized hash shard ([[Catalog.entriesForPart]]) — an
-        * unchanged part is one map lookup. A 10^7-chunk catalog with one
-        * busy partition plans from ~1/256th of the metadata. */
-      override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-        val lo = start.asInstanceOf[GraftOffset].cursors
-        val hi = end.asInstanceOf[GraftOffset].cursors
-        // a replayed checkpoint range is also a floor (restart path)
-        raiseFloor(lo); raiseFloor(hi)
-        hi.iterator.flatMap { case (p, h) =>
-          val l = lo.getOrElse(p, -1L)
-          if (h <= l) Iterator.empty
-          else catalog.entriesForPart(p).iterator.flatMap { e =>
-            // e.maxSeq > l skips fully-consumed files (incl. compaction
-            // rewrites of already-consumed rows); the reader re-applies the
-            // (l, h] row filter for files straddling the bounds. tsOverlaps
-            // prunes FILES only — offsets still advance over pruned data, so
-            // a ts-filtered stream never re-reads it later.
-            if (e.maxSeq > l && tsOverlaps(e))
-              Some(GraftInputPartition(e.file, e.part, l, h))
-            else None
-          }
-        }.toArray
-      }
-
-      override def createReaderFactory(): PartitionReaderFactory =
-        readerFactory(columnar = false)
-
-      override def deserializeOffset(json: String): Offset = {
-        val off = GraftOffset.fromJson(json)
-        raiseFloor(off.cursors)
-        off
-      }
-      override def commit(end: Offset): Unit =
-        raiseFloor(end.asInstanceOf[GraftOffset].cursors)
-      override def stop(): Unit = ()
+      if (best >= 0) cur(p) = best
     }
+    PipeService.sourceParts(sums.keysIterator, from, explicitPipe = true).foreach { p =>
+      val s = sums(p)
+      val safe = Store.watermarkFrom(snap, Some(p))
+      if (s.minMaxSeq == Long.MinValue) preciseCursor(p)
+      else if (s.minMaxSeq < 0) seqless(p)
+      else if (s.maxSeq <= safe) cur(p) = s.maxSeq
+      else preciseCursor(p)
+    }
+    floor.synchronized {
+      floor.foreach { case (p, s) =>
+        if (s > cur.getOrElse(p, Long.MinValue)) cur(p) = s
+      }
+    }
+    val off = GraftOffset(cur.toMap)
+    raiseFloor(off.cursors)
+    off
+  }
+
+  /** O(changed parts' shards) per trigger: only parts whose cursor
+    * ADVANCED (`h > l`) have their entries consulted, and each costs
+    * one memoized hash shard ([[graft.store.Catalog.entriesForPart]]) —
+    * an unchanged part is one map lookup. A 10^7-chunk catalog with one
+    * busy partition plans from ~1/256th of the metadata.
+    *
+    * Each part's `(l, h]` pair rides along as two partition-value
+    * constants that the batch filters rows on, then drops — so the scan
+    * is the frame's only leaf and `numInputRows` is its row count (a
+    * joined cursor table would count as input too). */
+  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
+    val lo = start.fold(Map.empty[String, Long])(GraftOffset.of(_).cursors)
+    val hi = GraftOffset.of(end).cursors
+    // a replayed checkpoint range is also a floor (restart path)
+    raiseFloor(lo); raiseFloor(hi)
+    val bounds = hi.collect {
+      case (p, h) if h > lo.getOrElse(p, -1L) => p -> (lo.getOrElse(p, -1L), h)
+    }
+    // e.maxSeq > l skips fully-consumed files (incl. compaction rewrites
+    // of already-consumed rows); the row filter handles files straddling
+    // the bounds. ts predicates prune FILES only — offsets still advance
+    // over pruned data, so a ts-filtered stream never re-reads it later.
+    val entries = bounds.iterator.flatMap { case (p, (l, _)) =>
+      store.catalog.entriesForPart(p).filter(_.maxSeq > l)
+    }.toSeq
+    import StoreFileIndex.{HiCol, LoCol}
+    GraftColumn.streamingFrame(store.spark,
+        store.relation(StoreFileIndex.of(store.root, entries, Some(bounds))))
+      .where(col("seq") > col(LoCol) && col("seq") <= col(HiCol))
+      .drop(LoCol, HiCol)
+  }
+
+  override def commit(end: Offset): Unit = raiseFloor(GraftOffset.of(end).cursors)
+  override def stop(): Unit = ()
 }
 
 /** Streaming offset: partition tag line → highest consumed `seq`. */
@@ -382,6 +270,13 @@ final case class GraftOffset(cursors: Map[String, Long]) extends Offset {
 }
 
 object GraftOffset {
+  /** Any offset Spark hands the source: its own, or (after a restart)
+    * the checkpoint's `SerializedOffset` of one. */
+  def of(o: OffsetV2): GraftOffset = o match {
+    case g: GraftOffset => g
+    case other => fromJson(other.json())
+  }
+
   /** Quote-aware parse of `[{"part":"...","seq":N},...]` as written by
     * [[GraftOffset.json]]: object boundaries are found by scanning with
     * in-string state (PipeService.esc escapes `"` and `\`, so a `}` / `,`
@@ -414,102 +309,5 @@ object GraftOffset {
       i += 1
     }
     GraftOffset(entries.result())
-  }
-}
-
-/** One catalog file with the partition's seq bounds (lo exclusive, hi
-  * inclusive). */
-final case class GraftInputPartition(file: String, part: String,
-    loSeq: Long, hiSeq: Long) extends InputPartition
-
-final case class GraftReaderFactory(conf: SerializableHadoopConf,
-    columns: Array[String], tsLo: Long, tsHi: Long, columnar: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(p.asInstanceOf[GraftInputPartition], conf.value,
-      columns, tsLo, tsHi)
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarReader(p.asInstanceOf[GraftInputPartition], conf.value,
-      columns, tsLo, tsHi)
-}
-
-/** Executor-side parquet reader for one store chunk file, via the
-  * parquet-java Group API (the file carries exactly the [[Model.schema]]
-  * data columns; `part` comes from the catalog, not the file).
-  *
-  * Pruning at three levels: only the requested columns (plus `seq`/`ts`
-  * when a seq range or ts filter needs them) are in the parquet
-  * projection, so unrequested column chunks are never decoded; a pushed
-  * ts range becomes a record filter whose row-group and page statistics
-  * skip within the file; and rows outside the streaming (loSeq, hiSeq]
-  * range are dropped before conversion. Chunk files are bounded by the
-  * store's append/compact file sizing, so one InputPartition is one
-  * task's worth of rows.
-  */
-final class GraftPartitionReader(p: GraftInputPartition, baseConf: Configuration,
-    columns: Array[String], tsLo: Long, tsHi: Long)
-    extends PartitionReader[InternalRow] {
-
-  private val needSeqFilter = p.loSeq > -1L || p.hiSeq < Long.MaxValue
-  private val needTsFilter = tsLo != Long.MinValue || tsHi != Long.MaxValue
-
-  // direct-to-InternalRow materialization (projection decided inside
-  // ReadSupport.init from the file's own schema; filter-only seq/ts land
-  // in side channels, not row slots) — see RowReadSupport
-  private val support =
-    new GraftRowReadSupport(columns, p.part, needSeqFilter, needTsFilter)
-
-  private val reader: ParquetReader[InternalRow] = {
-    val conf = new Configuration(baseConf)
-    val b = ParquetReader.builder(support, new Path(p.file))
-      .withConf(conf)
-    if (needTsFilter) {
-      import org.apache.parquet.filter2.predicate.FilterApi
-      val tsCol = FilterApi.longColumn("ts")
-      val pred = (tsLo != Long.MinValue, tsHi != Long.MaxValue) match {
-        case (true, true) =>
-          FilterApi.and(FilterApi.gtEq(tsCol, java.lang.Long.valueOf(tsLo)),
-            FilterApi.ltEq(tsCol, java.lang.Long.valueOf(tsHi)))
-        case (true, false) => FilterApi.gtEq(tsCol, java.lang.Long.valueOf(tsLo))
-        case _ => FilterApi.ltEq(tsCol, java.lang.Long.valueOf(tsHi))
-      }
-      b.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(pred)).build()
-    } else b.build()
-  }
-
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    var r = reader.read()
-    while (r != null) {
-      if (!needSeqFilter ||
-          (support.lastSeq > p.loSeq && support.lastSeq <= p.hiSeq)) {
-        row = r
-        return true
-      }
-      r = reader.read()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-}
-
-/** Hadoop Configuration is not Serializable; ship it via its own
-  * write/readFields (what connectors do when they cannot reach Spark's
-  * private SerializableConfiguration). */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
   }
 }

@@ -62,7 +62,12 @@ final case class CatEntry(
     minTs: Long,
     maxTs: Long,
     writeTs: Long,     // wall-clock ns when the entry was added (ingest order)
-    maxSeq: Long = -1L) // max seq in the file (footer stats); -1 = unknown
+    maxSeq: Long = -1L) { // max seq in the file (footer stats); -1 = unknown
+
+  /** Whether the chunk's `[minTs, maxTs]` meets the inclusive `[lo, hi]`:
+    * a chunk wholly outside the range holds no row in it. */
+  def overlaps(lo: Long, hi: Long): Boolean = maxTs >= lo && minTs <= hi
+}
 
 /** Per-partition aggregate served by [[Catalog.partSummaries]]: the
   * admin-plane view (SHOW PARTITIONS, totals, the epoch high-water,
@@ -746,7 +751,7 @@ object Catalog {
     locks.getOrElseUpdate(path, new Object)
 
   // ONE Catalog instance per qualified path, JVM-wide: every reader of a
-  // root (Store, the LQL engine, the DSv2 batch/streaming source) shares
+  // root (Store, the LQL engine, the graft-store batch/streaming source) shares
   // one set of fingerprint-memoized parse caches, so a streaming trigger
   // never re-parses state an engine query (or the previous trigger)
   // already parsed. Safe because all mutation goes through the per-path

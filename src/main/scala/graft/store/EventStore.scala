@@ -63,7 +63,7 @@ object EventStore {
     * across JVMs via a marker file. Keyed by the RESOLVED root (not the
     * sfDir), so a mid-JVM testdata regeneration can't split-brain the
     * in-memory engine against the root that [[storeRoot]] callers
-    * (Bench, the DSv2 entries) recompute. */
+    * (Bench, the connector entries) recompute. */
   def engine(spark: SparkSession, sfDir: String): Engine = {
     val root = storeRoot(sfDir)
     cache.getOrElseUpdate(root, {

@@ -5,7 +5,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The canonical LogEvent store: a parquet table physically partitioned by
   * the canonical tag line (`part`), with a driver-side [[Catalog]] updated
@@ -19,15 +22,23 @@ import org.apache.spark.sql.functions._
   *   tindex           → [[Catalog]]
   *   Write(tags,...)  → [[Store.write]]
   *
-  * Queries read `data/` with a `part IN (...)` predicate so Catalyst prunes
-  * partitions statically and pushes `ts` filters to parquet row groups —
-  * the same two-level pruning the reference does with tindex + tmindex.
+  * Every read of chunk files — queries, pipes, compaction and the
+  * `graft-store` connector — is Spark's parquet scan over a catalog file
+  * list ([[StoreFileIndex]], wrapped by [[Store.relation]]): the catalog
+  * names the files and prunes them by partition and footer ts range, and
+  * parquet pushes `ts` filters to row groups — the same two-level pruning
+  * the reference does with tindex + tmindex.
   */
 object Store {
   /** Low bits of `seq` hold the within-batch row number (2^36 rows per
     * partition per append); high bits hold the per-append epoch (~134M
     * appends per store lifetime). See [[Store.assignSeq]]. */
   val SeqEpochShift = 36
+
+  /** The columns of a chunk file: [[Model.schema]] without `part`, which
+    * comes from the catalog. Nullable, as Spark reads parquet. */
+  private[graft] val DataSchema: StructType = StructType(Model.schema.fields
+    .filter(_.name != "part").map(_.copy(nullable = true)))
 
   private val epochs =
     scala.collection.concurrent.TrieMap.empty[String, EpochAllocator]
@@ -465,7 +476,7 @@ final class Store(val spark: SparkSession, val root: String) {
     val files = entries.map(_.file)
     val totalBytes = entries.map(_.sizeBytes).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.option("basePath", dataDir).schema(Model.schema).parquet(files: _*)
+    val df = readEntries(entries)
     val stagingDir = new Path(s"$root/staging/${java.util.UUID.randomUUID().toString.take(12)}")
     df.repartitionByRange(nOut, col("ts"), col("seq"))
       .sortWithinPartitions("ts", "seq")
@@ -541,26 +552,30 @@ final class Store(val spark: SparkSession, val root: String) {
     }.toMap
 
   /** Read the given partitions, optionally bounded to an inclusive ts
-    * range. The scan is handed the exact FILE list from the catalog — no
-    * filesystem listing at all, and files whose footer [minTs, maxTs]
-    * doesn't overlap the range are never opened (the reference's
-    * tindex + tmindex two-level pruning): at 100 TB the read cost is
-    * proportional to the chunks a query actually touches. Callers still
-    * apply the range as a row filter — file pruning is a superset.
-    * `basePath` keeps `part` as a column parsed from the paths. */
+    * range. The entries are resolved from the catalog when called, and
+    * files whose footer [minTs, maxTs] doesn't overlap the range are never
+    * opened (the reference's tindex + tmindex two-level pruning): at
+    * 100 TB the read cost is proportional to the chunks a query actually
+    * touches, with no filesystem listing at all. Callers still apply the
+    * range as a row filter — file pruning is a superset. */
   def read(parts: Seq[String], tsRange: Option[(Long, Long)] = None): DataFrame = {
     // per-part sharded prune: cost tracks the selected parts' chunks plus
     // un-compacted segments, never the total catalog size
     val idx = catalog.entriesForParts(parts.distinct)
-    var entries = parts.distinct.sorted.flatMap(p => idx.getOrElse(p, Vector.empty)).toVector
-    tsRange.foreach { case (lo, hi) =>
-      entries = entries.filter(e => e.maxTs >= lo && e.minTs <= hi)
-    }
-    if (entries.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.schema)
-    spark.read.option("basePath", dataDir).schema(Model.schema)
-      .parquet(entries.map(_.file): _*)
+    readEntries(idx.valuesIterator.flatten
+      .filter(e => tsRange.forall { case (lo, hi) => e.overlaps(lo, hi) }).toSeq)
   }
+
+  /** Rows of exactly these catalog entries (`part` from the catalog). */
+  private[graft] def readEntries(entries: Seq[CatEntry]): DataFrame =
+    spark.baseRelationToDataFrame(relation(StoreFileIndex.of(root, entries)))
+
+  /** The one way to read catalog files: Spark's built-in parquet scan over
+    * a [[StoreFileIndex]]. Columns are [[Model.schema]]'s order, plus the
+    * index's cursor columns when it has them. */
+  private[graft] def relation(index: StoreFileIndex): HadoopFsRelation =
+    HadoopFsRelation(index, index.partitionSchema, Store.DataSchema, None,
+      new ParquetFileFormat, Map.empty)(spark)
 
   /** Delete a set of files (TRUNCATE path) and drop them from the catalog.
     * Emptied partition directories stay: nothing lists `data/`, and a

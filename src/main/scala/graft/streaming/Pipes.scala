@@ -213,12 +213,11 @@ final class PipeService(store: Store, clock: () => Instant = () => Instant.now()
 
   private def start(p: PipeDef): PipeWorker =
     running.getOrElseUpdate(p.name, {
-      val pred = TagsCompiler.compile(p.from)
       // compiled per TRIGGER, not once: relative datetimes in the WHERE
       // ("ts > '-5m'") must re-anchor against the clock each micro-batch,
       // like the reference re-evaluates conditions per iteration
       val whereCol = () => p.where.map(w => whereC.compile(w, col("ts"), col("msg"), col("fields")))
-      val w = new PipeWorker(store, p, pred, whereCol,
+      val w = new PipeWorker(store, p, whereCol,
         maxFilesPerTrigger, compactThreshold, pollMs, cdcDedup)
       w.startThread()
       w
@@ -238,7 +237,7 @@ final class PipeService(store: Store, clock: () => Instant = () => Instant.now()
   * fingerprint check.
   */
 final class PipeWorker private[streaming] (store: Store, p: PipeDef,
-    pred: Map[String, String] => Boolean, whereCol: () => Option[Column],
+    whereCol: () => Option[Column],
     maxFilesPerTrigger: Int, compactThreshold: Int, pollMs: Long,
     cdcDedup: Boolean = false) {
 
@@ -366,19 +365,14 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
   }
 
   private def triggerOnce(): Int = {
-    val tagsCache = scala.collection.mutable.HashMap.empty[String, Map[String, String]]
-    def tagsOf(line: String): Map[String, String] =
-      tagsCache.getOrElseUpdate(line, Model.parseTags(line).getOrElse(Map.empty))
     // discovery is O(new data), not O(catalog): the O(parts) summaries
     // name the partitions whose seq high-water advanced past the cursor
     // (a part-level maxSeq ≤ cursor means NO chunk can pass the
     // entry-level gate below), then only those partitions' shards load
     // per-chunk detail
-    val advanced = store.catalog.partSummaries().valuesIterator.filter { ps =>
-      val t = tagsOf(ps.part)
-      !t.contains(PipeTag) && pred(t) &&   // pipes never cascade
-        ps.maxSeq > cursors.getOrElse(ps.part, -1L)
-    }.map(_.part).toSeq
+    val sums = store.catalog.partSummaries()
+    val advanced = sourceParts(sums.keysIterator, p.from, explicitPipe = false)
+      .filter(pt => sums(pt).maxSeq > cursors.getOrElse(pt, -1L))
     if (advanced.isEmpty) return 0
     // entries above the in-flight watermark are deferred: a lower-epoch
     // append to the same partition may still be running, and advancing the
@@ -414,8 +408,7 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
     }
 
     val parts = chosen.map(_.part).distinct.toSeq
-    var df = spark.read.option("basePath", store.dataDir).schema(Model.schema)
-      .parquet(chosen.map(_.file).toSeq: _*)
+    var df = store.readEntries(chosen.toSeq)
     // per-partition cursor + parsed source tags as ONE broadcast side table
     // (a trigger can span thousands of partitions at the 100 TB design
     // point — a literal OR/CASE chain per partition would blow codegen,
@@ -426,7 +419,8 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
     //    49-63; on a key clash the tag value wins — maps cannot hold
     //    duplicates)
     import spark.implicits._
-    val meta = parts.map(pt => (pt, cursors.getOrElse(pt, -1L), tagsOf(pt)))
+    val meta = parts
+      .map(pt => (pt, cursors.getOrElse(pt, -1L), Model.parseTags(pt).getOrElse(Map.empty)))
       .toDF("part", "__cur", "__ptags")
     df = df.join(broadcast(meta), "part").where(col("seq") > col("__cur"))
     // WHERE sees the record's own fields (tag stamping happens after the
@@ -516,21 +510,18 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
     chosen.size
   }
 
-  /** A planned file vanished: either the scan failed mid-job
-    * (FileNotFoundException) or plan resolution rejected the path
-    * (AnalysisException PATH_NOT_FOUND) — both mean a concurrent
-    * compact/TRUNCATE moved the catalog while this trigger was planning. */
+  /** A planned file vanished mid-scan (FileNotFoundException): a
+    * concurrent compact/TRUNCATE moved the catalog while this trigger was
+    * running. Planning itself never touches the files (the catalog file
+    * index), so no plan-time form of the race exists. */
   private def isMissingFile(e: Throwable): Boolean = {
     var t: Throwable = e
     var depth = 0
     while (t != null && depth < 16) {
       t match {
         case _: java.io.FileNotFoundException => return true
-        case a: org.apache.spark.sql.AnalysisException
-            if a.getCondition == "PATH_NOT_FOUND" => return true
         case s: org.apache.spark.SparkException
-            // the executor-side shape of the same race (the reader finds
-            // the path gone mid-task rather than at plan time)
+            // the same race as Spark's file reader reports it
             if s.getCondition == "FAILED_READ_FILE.FILE_NOT_EXIST" => return true
         case _ => ()
       }
@@ -577,6 +568,23 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
 object PipeService {
   /** Reserved tag marking pipe destinations (reference ppipe.go:224-228). */
   val PipeTag = "logrange.pipe"
+
+  /** The tag lines among `lines` that a FROM source selects — the one
+    * FROM-to-parts rule of the pipe workers and the `graft-store`
+    * connector. Behind the cascade guard, partitions tagged [[PipeTag]]
+    * never match (reference partition.go:158-159 noEvent), so pipes never
+    * read pipe output. With `explicitPipe`, a FROM that names
+    * `logrange.pipe` itself (the connector's `{logrange.pipe=<name>}`)
+    * lifts the guard. LQL SELECT has no guard (see Engine.prune). */
+  def sourceParts(lines: Iterator[String], from: Option[Source],
+      explicitPipe: Boolean): Vector[String] = {
+    val pred = TagsCompiler.compile(from)
+    val guard = !(explicitPipe && from.exists(_.render.contains(PipeTag)))
+    lines.filter { line =>
+      val tags = Model.parseTags(line).getOrElse(Map.empty)
+      !(guard && tags.contains(PipeTag)) && pred(tags)
+    }.toVector
+  }
 
   /** map-concat with right-side wins, tolerating null left. */
   def concatFields(fields: Column, tags: Column): Column = {

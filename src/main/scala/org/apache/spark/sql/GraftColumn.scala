@@ -22,6 +22,18 @@ object GraftColumn {
       case _ => ()
     }
 
+  /** A streaming frame over a relation — what a V1 streaming `Source`'s
+    * `getBatch` returns (Spark's own file stream source does the same). */
+  def streamingFrame(spark: SparkSession, rel: sources.BaseRelation): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      execution.datasources.LogicalRelation(rel, isStreaming = true))
+
+  /** A Catalyst predicate as a data source `Filter`, when it has one
+    * (`DataSourceStrategy.translateFilter` is sql-private). */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = true)
+
   /** Register a function into a live session's registry (sessionState is
     * sql-private; the extensions path only runs at session build time). */
   def registerFunction(spark: SparkSession,

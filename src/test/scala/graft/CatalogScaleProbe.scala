@@ -123,10 +123,10 @@ object CatalogScaleProbe {
     val (_, incrMs) = time(cold2.load())
 
     // ---- streaming-source discovery (round-13 directive 1) ----
-    // The DSv2 source's per-trigger work — computeLatestOffset (via
-    // latestOffset) and an idle/one-part-advanced planInputPartitions —
-    // must be O(parts)/O(changed shards), NOT O(chunks): budget-assert it
-    // against THIS catalog through the real MicroBatchStream.
+    // The streaming source's per-trigger work — latestOffset and an
+    // idle/one-part-advanced getBatch, which resolves the batch's catalog
+    // entries — must be O(parts)/O(changed shards), NOT O(chunks):
+    // budget-assert it against THIS catalog through the real V1 Source.
     // reuse an already-running session (CatalogSpec's smoke test runs
     // this inside the shared suite session — stopping THAT would kill
     // every later suite); stop only a session this probe itself created
@@ -137,14 +137,24 @@ object CatalogScaleProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     var offColdMs, offWarmMs, planIdleMs, planOneMs = -1.0
     try {
-      val scan = new graft.sources.GraftStoreScan(dir.getAbsolutePath, None)
-      val ms = scan.toMicroBatchStream("unused-checkpoint")
+      import graft.sources.GraftOffset
+      val src = new graft.sources.GraftStoreStream(
+        new graft.store.Store(spark, dir.getAbsolutePath), None)
+      def latest() = GraftOffset.of(src.latestOffset(null,
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()))
+      // the batch's planned files, straight from its catalog file index
+      // (a streaming frame cannot run a batch action)
+      def planned(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+              .location.listFiles(Nil, Nil)
+        }.flatten
       // fresh-JVM-analog cold: summaries sidecars parse once
-      val (off1, oc) = time(ms.latestOffset()); offColdMs = oc
-      val (off2, ow) = time(ms.latestOffset()); offWarmMs = ow
-      val cur = off1.asInstanceOf[graft.sources.GraftOffset].cursors
-      require(cur == off2.asInstanceOf[graft.sources.GraftOffset].cursors,
-        "latestOffset not idempotent on an unchanged catalog")
+      val (off1, oc) = time(latest()); offColdMs = oc
+      val (off2, ow) = time(latest()); offWarmMs = ow
+      val cur = off1.cursors
+      require(cur == off2.cursors, "latestOffset not idempotent on an unchanged catalog")
       require(cur.size == parts, s"expected $parts cursors, got ${cur.size}")
       // cursor correctness vs the synthetic layout: part j holds chunks
       // i ≡ j (mod parts), i <= n+1 (the incremental-append entry above)
@@ -154,16 +164,20 @@ object CatalogScaleProbe {
         else ((n - 1 - j).toLong / parts) * parts + j
       require(cur(target) == expected,
         s"cursor for $target = ${cur(target)}, expected $expected")
+      // one untimed idle batch first: the budgets are per-trigger catalog
+      // work, not the JVM's first Catalyst analysis
+      src.getBatch(Some(off1), off2)
       // idle trigger: zero advanced parts — pure cursor-map iteration
-      val (idle, pi) = time(ms.planInputPartitions(off1, off2)); planIdleMs = pi
-      require(idle.isEmpty, s"idle trigger planned ${idle.length} partitions")
+      val (idle, pi) = time(src.getBatch(Some(off1), off2)); planIdleMs = pi
+      require(planned(idle).isEmpty, s"idle trigger planned ${planned(idle).size} partitions")
       // one advanced part: plan must touch ONE hash shard, return the one
       // chunk above the rolled-back cursor
-      val lo = graft.sources.GraftOffset(cur.updated(target, cur(target) - 1L))
-      val (one, po) = time(ms.planInputPartitions(lo, off1)); planOneMs = po
-      require(one.length == 1 &&
-        one.head.asInstanceOf[graft.sources.GraftInputPartition].part == target,
-        s"one-part advance planned ${one.length} partitions")
+      val lo = GraftOffset(cur.updated(target, cur(target) - 1L))
+      val (one, po) = time(src.getBatch(Some(lo), off1)); planOneMs = po
+      val dirs = planned(one)
+      require(dirs.size == 1 && dirs.head.files.size == 1 &&
+        dirs.head.values.getUTF8String(0).toString == target,
+        s"one-part advance planned ${dirs.map(_.files.size).sum} files")
     } finally if (!hadActive) spark.stop()
 
     println(f"""{"entries":$n,"parts":$parts,"build_ms":$buildMs%.0f,"part_cold_ms":$partColdMs%.1f,"part_cold_jitwarm_ms":$partCold2Ms%.1f,"part_warm_ms":$partWarmMs%.3f,"chunks_for_part":${viaShard.size},"full_load_ms":$preMs%.0f,"incr_load_ms":$incrMs%.0f,"cold_load_ms":$coldMs%.0f,"warm_load_ms":$warmMs%.3f,"prune_index_ms":$idxMs%.3f,"prune_scan_ms":$scanMs%.1f,"heap_mb":$heapMb,"summaries_cold_ms":$sumColdMs%.1f,"summaries_warm_ms":$sumWarmMs%.3f,"offset_cold_ms":$offColdMs%.1f,"offset_warm_ms":$offWarmMs%.1f,"plan_idle_ms":$planIdleMs%.1f,"plan_one_part_ms":$planOneMs%.1f}""")
