@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.lql.Ast.{LqlException, Select, Source => LqlSource}
 import graft.lql.Parser
-import graft.store.{Store, StoreFileIndex}
+import graft.store.{StateFile, Store, StoreFileIndex}
 import graft.streaming.PipeService
 import org.apache.spark.sql.{DataFrame, GraftColumn, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
@@ -265,7 +265,7 @@ final class GraftStoreStream(store: Store, from: Option[LqlSource])
 final case class GraftOffset(cursors: Map[String, Long]) extends Offset {
   override def json(): String =
     cursors.toSeq.sortBy(_._1).map { case (p, s) =>
-      s"""{"part":"${PipeService.esc(p)}","seq":$s}"""
+      s"""{"part":"${StateFile.esc(p)}","seq":$s}"""
     }.mkString("[", ",", "]")
 }
 
@@ -279,10 +279,10 @@ object GraftOffset {
 
   /** Quote-aware parse of `[{"part":"...","seq":N},...]` as written by
     * [[GraftOffset.json]]: object boundaries are found by scanning with
-    * in-string state (PipeService.esc escapes `"` and `\`, so a `}` / `,`
-    * inside a part value — e.g. a Go-quoted tag containing "},{" — never
-    * splits an entry), and `seq` is read after the part string ends, not
-    * via lastIndexOf. */
+    * in-string state ([[StateFile.esc]] escapes `"` and `\`, so a `}` /
+    * `,` inside a part value — e.g. a Go-quoted tag containing "},{" —
+    * never splits an entry), and each entry is one [[StateFile]] record
+    * read with its keyed `str`/`num` scanner. */
   def fromJson(json: String): GraftOffset = {
     val entries = Map.newBuilder[String, Long]
     var i = 0
@@ -298,11 +298,9 @@ object GraftOffset {
         case '{' => objStart = i
         case '}' if objStart >= 0 =>
           val obj = json.substring(objStart, i + 1)
-          val seqKey = obj.lastIndexOf("\"seq\":")
-          if (seqKey < 0)
+          if (!obj.contains("\"seq\":"))
             throw LqlException(s"graft-store: bad offset entry: $obj")
-          val digits = obj.substring(seqKey + 6).takeWhile(ch => ch.isDigit || ch == '-')
-          entries += PipeService.jsonStr(obj, "part") -> digits.toLong
+          entries += StateFile.str(obj, "part") -> StateFile.num(obj, "seq", -1L)
           objStart = -1
         case _ => ()
       }

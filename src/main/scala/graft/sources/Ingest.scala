@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.lql.GoDates
 import graft.model.Model
-import graft.store.Store
+import graft.store.{StateFile, Store}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -440,65 +440,26 @@ object Collector {
     new Path(store.root, s"collector/$key.pos.jsonl")
   }
 
-  private def bak(p: Path) = new Path(p.getParent, p.getName + ".bak")
-
   /** Per-file collection state: consumed byte offset, text-parser date
     * carry, and the first-bytes fingerprint used to detect rotation. */
   final case class PosEntry(off: Long, lastTs: Long, pfxLen: Long, pfx: Long)
 
-  private def loadPositions(fs: org.apache.hadoop.fs.FileSystem, p: Path): Map[String, PosEntry] = {
-    val src = if (fs.exists(p)) p else { val b = bak(p); if (fs.exists(b)) b else return Map.empty }
-    val in = fs.open(src)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.linesIterator.filter(_.nonEmpty).map { line =>
-      // {"file":"...","off":N,...} with \uXXXX-escaped specials (see save),
-      // so the value can never contain a raw quote
-      val fileEnd = line.indexOf("\",\"off\":")
-      val raw = line.substring("{\"file\":\"".length, fileEnd)
-      def num(key: String): Long = {
-        val k = "\"" + key + "\":"
-        val at = line.indexOf(k)
-        if (at < 0) return 0L
-        var i = at + k.length
-        val st = i
-        while (i < line.length && (line.charAt(i).isDigit || line.charAt(i) == '-')) i += 1
-        line.substring(st, i).toLong
-      }
-      unescape(raw) -> PosEntry(num("off"), num("ts"), num("pfxlen"), num("pfx"))
+  /** Positions as [[StateFile]] records, one per file (lines written
+    * before the shared escape carry `"`/`\` as `\u0022`/`\u005c`, which
+    * [[StateFile.unesc]] reads the same). */
+  private[graft] def loadPositions(fs: org.apache.hadoop.fs.FileSystem, p: Path): Map[String, PosEntry] =
+    StateFile.read(fs, p).map { line =>
+      import StateFile.num
+      StateFile.str(line, "file") ->
+        PosEntry(num(line, "off", 0L), num(line, "ts", 0L), num(line, "pfxlen", 0L), num(line, "pfx", 0L))
     }.toMap
-  }
 
-  /** Crash-safe rewrite (Catalog.save pattern): losing the position file
-    * would re-ingest every file from byte 0 — duplicates, not data loss,
-    * but worth the same .bak discipline as the catalog. */
+  /** Crash-safe rewrite: losing the position file would re-ingest every
+    * file from byte 0 — duplicates, not data loss, but worth the same
+    * [[StateFile.replace]] discipline as the pipe cursors. */
   private def savePositions(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-      pos: Map[String, PosEntry]): Unit = {
-    if (!fs.exists(p.getParent)) fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(pos.toSeq.sortBy(_._1).map { case (f, e) =>
-      s"""{"file":"${escape(f)}","off":${e.off},"ts":${e.lastTs},"pfxlen":${e.pfxLen},"pfx":${e.pfx}}"""
-    }.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val b = bak(p)
-    if (fs.exists(b)) fs.delete(b, false)
-    if (fs.exists(p)) Store.renameOrThrow(fs, p, b)
-    Store.renameOrThrow(fs, tmp, p)
-    fs.delete(b, false)
-  }
-
-  private def escape(s: String): String = s.flatMap {
-    case '"' => "\\u0022"; case '\\' => "\\u005c"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 5 < s.length && s.charAt(i + 1) == 'u') {
-        sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
+      pos: Map[String, PosEntry]): Unit =
+    StateFile.replace(fs, p, pos.toSeq.sortBy(_._1).map { case (f, e) =>
+      s"""{"file":"${StateFile.esc(f)}","off":${e.off},"ts":${e.lastTs},"pfxlen":${e.pfxLen},"pfx":${e.pfx}}"""
+    })
 }

@@ -542,56 +542,25 @@ final class Catalog(fs: FileSystem, path: Path) {
     finally out.close()
   }
 
-  // minimal JSON codec (flat record of strings/longs; no external deps)
-  private def esc(s: String) = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-  /** Sidecar line codec for [[PartSummary]] — the same minimal JSON as
-    * [[encode]]; summaries are O(parts) so the decode path is never a
-    * hot loop and the order-insensitive scanner suffices. */
+  /** Sidecar line codec for [[PartSummary]] — the same [[StateFile]]
+    * record as [[encode]]; summaries are O(parts) so the decode path is
+    * never a hot loop and the keyed scanner suffices. */
   private def encodeSum(p: PartSummary): String =
-    s"""{"part":"${esc(p.part)}","chunks":${p.chunks},"sizeBytes":${p.sizeBytes},""" +
+    s"""{"part":"${StateFile.esc(p.part)}","chunks":${p.chunks},"sizeBytes":${p.sizeBytes},""" +
       s""""records":${p.records},"maxSeq":${p.maxSeq},"maxWriteTs":${p.maxWriteTs},""" +
       s""""minMaxSeq":${p.minMaxSeq}}"""
 
   private def decodeSum(line: String): PartSummary = {
-    def str(key: String): String = {
-      val k = "\"" + key + "\":\""
-      val st = line.indexOf(k) + k.length
-      val sb = new StringBuilder
-      var i = st
-      while (line.charAt(i) != '"') {
-        if (line.charAt(i) == '\\') {
-          line.charAt(i + 1) match {
-            case '"' => sb.append('"'); case '\\' => sb.append('\\')
-            case 'n' => sb.append('\n')
-            case 'u' => sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar)
-            case o => sb.append(o)
-          }
-          i += (if (line.charAt(i + 1) == 'u') 6 else 2)
-        } else { sb.append(line.charAt(i)); i += 1 }
-      }
-      sb.toString
-    }
-    def num(key: String, default: Long = 0L): Long = {
-      val k = "\"" + key + "\":"
-      val at = line.indexOf(k)
-      if (at < 0) return default
-      val st = at + k.length
-      var i = st
-      while (i < line.length && (line.charAt(i).isDigit || line.charAt(i) == '-')) i += 1
-      line.substring(st, i).toLong
-    }
-    PartSummary(str("part"), num("chunks"), num("sizeBytes"), num("records"),
-      num("maxSeq"), num("maxWriteTs"),
+    import StateFile.{num, str}
+    PartSummary(str(line, "part"), num(line, "chunks", 0L), num(line, "sizeBytes", 0L),
+      num(line, "records", 0L), num(line, "maxSeq", 0L), num(line, "maxWriteTs", 0L),
       // absent in pre-round-13 sidecars: MinValue = UNKNOWN (see the
       // PartSummary doc) — readers that care fall back to the shard
-      num("minMaxSeq", Long.MinValue))
+      num(line, "minMaxSeq", Long.MinValue))
   }
 
   private def encode(e: CatEntry): String =
-    s"""{"part":"${esc(e.part)}","file":"${esc(e.file)}","records":${e.records},""" +
+    s"""{"part":"${StateFile.esc(e.part)}","file":"${StateFile.esc(e.file)}","records":${e.records},""" +
       s""""sizeBytes":${e.sizeBytes},"minTs":${e.minTs},"maxTs":${e.maxTs},""" +
       s""""writeTs":${e.writeTs},"maxSeq":${e.maxSeq}}"""
 
@@ -617,7 +586,7 @@ final class Catalog(fs: FileSystem, path: Path) {
       while (line.charAt(j) != '"') {
         if (line.charAt(j) == '\\') { esc = true; j += 2 } else j += 1
       }
-      val out = if (esc) Catalog.unescape(line, start, j) else line.substring(start, j)
+      val out = if (esc) StateFile.unesc(line, start, j) else line.substring(start, j)
       i = j + 1
       out
     }
@@ -649,35 +618,10 @@ final class Catalog(fs: FileSystem, path: Path) {
   }
 
   private def slowDecode(line: String): CatEntry = {
-    def str(key: String): String = {
-      val k = "\"" + key + "\":\""
-      val st = line.indexOf(k) + k.length
-      val sb = new StringBuilder
-      var i = st
-      while (line.charAt(i) != '"') {
-        if (line.charAt(i) == '\\') {
-          line.charAt(i + 1) match {
-            case '"' => sb.append('"'); case '\\' => sb.append('\\')
-            case 'n' => sb.append('\n')
-            case 'u' => sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar)
-            case o => sb.append(o)
-          }
-          i += (if (line.charAt(i + 1) == 'u') 6 else 2)
-        } else { sb.append(line.charAt(i)); i += 1 }
-      }
-      sb.toString
-    }
-    def num(key: String, default: Long = 0L): Long = {
-      val k = "\"" + key + "\":"
-      val at = line.indexOf(k)
-      if (at < 0) return default
-      val st = at + k.length
-      var i = st
-      while (i < line.length && (line.charAt(i).isDigit || line.charAt(i) == '-')) i += 1
-      line.substring(st, i).toLong
-    }
-    CatEntry(str("part"), str("file"), num("records"), num("sizeBytes"),
-      num("minTs"), num("maxTs"), num("writeTs"), num("maxSeq", -1L))
+    import StateFile.{num, str}
+    CatEntry(str(line, "part"), str(line, "file"), num(line, "records", 0L),
+      num(line, "sizeBytes", 0L), num(line, "minTs", 0L), num(line, "maxTs", 0L),
+      num(line, "writeTs", 0L), num(line, "maxSeq", -1L))
   }
 }
 
@@ -706,25 +650,6 @@ object Catalog {
   /** Consumed-segment list inside the shards dir (not `.jsonl`, so the
     * base-file listing never parses it as entries). */
   private[store] val ConsumedName = "consumed.txt"
-
-  /** Escape-decode of `line[from, to)` — the string escapes [[esc]] emits. */
-  private def unescape(line: String, from: Int, to: Int): String = {
-    val sb = new StringBuilder(to - from)
-    var i = from
-    while (i < to) {
-      val c = line.charAt(i)
-      if (c == '\\') {
-        line.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'u' => sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar); i += 6
-          case o => sb.append(o); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   /** Control-flow signal for [[fastDecode]]'s bail-to-slow-path. */
   private object FastFail extends RuntimeException with scala.util.control.NoStackTrace

@@ -24,8 +24,6 @@ object EventStore {
     * keyed by it. */
   val Version = "v2"
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Engine]
-
   /** (size, mtime) fingerprint of a testdata dir's events table — the ONE
     * key scheme for every derived on-disk store cache ([[storeRoot]],
     * [[PipeStore]]): the driver regenerates testdata between rounds, and a
@@ -46,12 +44,36 @@ object EventStore {
       f.getName.startsWith(prefix) && f.getName.endsWith(s"-$name") &&
         f.getAbsolutePath != keep
     }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
     stale.foreach(rm)
   }
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete()
+  }
+
+  // every fixture store's engine, keyed by its root
+  private val engines = scala.collection.concurrent.TrieMap.empty[String, Engine]
+
+  /** The engine over the fixture store at `root`, built at most once per
+    * JVM: a root holding a `_BUILT` marker is reused across JVMs, anything
+    * else there is wiped and rebuilt by `build`. `stale` = the
+    * (prefix, name) of the root's fingerprint-keyed siblings to drop
+    * ([[dropStaleSiblings]]) before. */
+  private[store] def fixtureEngine(spark: SparkSession, root: String,
+      stale: Option[(String, String)])(build: Engine => Unit): Engine =
+    engines.getOrElseUpdate(root, {
+      stale.foreach { case (prefix, name) => dropStaleSiblings(root, prefix, name) }
+      val eng = new Engine(new Store(spark, root))
+      val marker = new java.io.File(s"$root/_BUILT")
+      if (!marker.exists()) {
+        rm(new java.io.File(root))
+        build(eng)
+        marker.getParentFile.mkdirs()
+        marker.createNewFile()
+      }
+      eng
+    })
 
   def storeRoot(sfDir: String): String = {
     val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
@@ -65,27 +87,9 @@ object EventStore {
     * in-memory engine against the root that [[storeRoot]] callers
     * (Bench, the connector entries) recompute. */
   def engine(spark: SparkSession, sfDir: String): Engine = {
-    val root = storeRoot(sfDir)
-    cache.getOrElseUpdate(root, {
-      val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-      dropStaleSiblings(root, s"store-$Version-", name)
-      val store = new Store(spark, root)
-      val marker = new java.io.File(s"$root/_BUILT")
-      if (!marker.exists()) {
-        val dir = new java.io.File(root)
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(dir)
-        }
-        build(spark, sfDir, store)
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
-      new Engine(store)
-    })
+    val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    fixtureEngine(spark, storeRoot(sfDir), Some((s"store-$Version-", name)))(eng =>
+      build(spark, sfDir, eng.store))
   }
 
   /** The canonical events→LogEvent mapping (ts, msg, fields, seq, part),

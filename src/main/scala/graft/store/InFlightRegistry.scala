@@ -86,8 +86,8 @@ trait InFlightRegistry {
   * the one failure mode the content format cannot tolerate); any file
   * that fails to parse is treated as targets-unknown, which only ever
   * defers MORE. Content: first line `*` (unknown targets) or one
-  * [[graft.streaming.PipeService.esc]]'d part line per line (esc
-  * escapes newlines, so part lines are line-safe).
+  * [[StateFile.esc]]'d part line per line (the escape covers newlines,
+  * so part lines are line-safe).
   *
   * Expiry uses the file's modification time against
   * [[Store.EpochLeaseNanos]] — the shared filesystem's clock, so two
@@ -109,8 +109,7 @@ final class FileInFlightRegistry(fs: FileSystem, dir: Path)
     val txt = parts match {
       case None => "*\n"
       case Some(ps) =>
-        ps.toSeq.sorted.map(graft.streaming.PipeService.esc)
-          .mkString("", "\n", "\n")
+        ps.toSeq.sorted.map(StateFile.esc).mkString("", "\n", "\n")
     }
     txt.getBytes(StandardCharsets.UTF_8)
   }
@@ -218,28 +217,8 @@ final class FileInFlightRegistry(fs: FileSystem, dir: Path)
         finally in.close()
       val lines = txt.linesIterator.filter(_.nonEmpty).toVector
       if (lines.isEmpty || lines.head == "*") None
-      else Some(lines.map(unesc).toSet)
+      else Some(lines.map(l => StateFile.unesc(l, 0, l.length)).toSet)
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case o => sb.append(o); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 }
 
 object FileInFlightRegistry {

@@ -22,8 +22,6 @@ object IngestStore {
     * ingest time). */
   val PureClock: Instant = Instant.parse("2024-05-06T07:08:09Z")
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Engine]
-
   /** On-disk cache root for `sfDir` (marker-file convention as
     * [[EventStore.storeRoot]]; fixture content is sfDir-independent so no
     * data fingerprint is needed in the key). */
@@ -32,27 +30,10 @@ object IngestStore {
     s"/tmp/graft/ingeststore-$Version-$name"
   }
 
-  def engine(spark: SparkSession, sfDir: String): Engine =
-    cache.getOrElseUpdate(sfDir, {
-      val root = storeRoot(sfDir)
-      val store = new Store(spark, root)
-      val eng = new Engine(store)
-      val marker = new java.io.File(s"$root/_BUILT")
-      if (!marker.exists()) {
-        val dir = new java.io.File(root)
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(dir)
-        }
-        build(spark, root, store)
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
-      eng
-    })
+  def engine(spark: SparkSession, sfDir: String): Engine = {
+    val root = storeRoot(sfDir)
+    EventStore.fixtureEngine(spark, root, None)(eng => build(spark, root, eng.store))
+  }
 
   private def write(path: String, content: String): Unit = {
     val p = Paths.get(path)

@@ -24,8 +24,6 @@ object PipeStore {
 
   val Version = "v4" // round 6: catalog-driven PipeWorker build path
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Engine]
-
   /** On-disk cache root for `sfDir` — same regeneration-proof cache key
     * (and root-keyed in-JVM memo) as EventStore; see
     * [[EventStore.dataFingerprint]]. */
@@ -36,27 +34,8 @@ object PipeStore {
 
   def engine(spark: SparkSession, sfDir: String): Engine = {
     val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val root = storeRoot(sfDir)
-    cache.getOrElseUpdate(root, {
-      EventStore.dropStaleSiblings(root, s"pipestore-$Version-", name)
-      val store = new Store(spark, root)
-      val eng = new Engine(store)
-      val marker = new java.io.File(s"$root/_BUILT")
-      if (!marker.exists()) {
-        val dir = new java.io.File(root)
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(dir)
-        }
-        build(spark, sfDir, eng)
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
-      eng
-    })
+    EventStore.fixtureEngine(spark, storeRoot(sfDir), Some((s"pipestore-$Version-", name)))(
+      build(spark, sfDir, _))
   }
 
   private def build(spark: SparkSession, sfDir: String, eng: Engine): Unit = {
@@ -115,31 +94,11 @@ object CdcPipeStore {
     * in LqlQueries): k ≡ 0 (mod 3) rows collapse to this line. */
   val Boilerplate = "recurring boilerplate failure alpha"
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Engine]
-
   def engine(spark: SparkSession, sfDir: String): Engine = {
     val name = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val root = s"/tmp/graft/cdcpipestore-$Version-${EventStore.dataFingerprint(sfDir)}-$name"
-    cache.getOrElseUpdate(root, {
-      EventStore.dropStaleSiblings(root, s"cdcpipestore-$Version-", name)
-      val store = new Store(spark, root)
-      val eng = new Engine(store)
-      val marker = new java.io.File(s"$root/_BUILT")
-      if (!marker.exists()) {
-        val dir = new java.io.File(root)
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(dir)
-        }
-        build(spark, sfDir, eng)
-        marker.getParentFile.mkdirs()
-        marker.createNewFile()
-      }
-      eng
-    })
+    EventStore.fixtureEngine(spark, root, Some((s"cdcpipestore-$Version-", name)))(
+      build(spark, sfDir, _))
   }
 
   private def build(spark: SparkSession, sfDir: String, eng: Engine): Unit = {

@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.engine.{Engine, Tail}
 import graft.lql.Ast.{CreatePipe, LqlException}
+import graft.store.StateFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 
 import java.io.{BufferedOutputStream, OutputStream, PrintStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 import java.time.{Duration, Instant, ZoneOffset}
 
 /** Forwarder: pumps a pipe's destination partition into an external sink
@@ -75,7 +76,8 @@ object Forwarder {
 
   /** Run the pump until `keepRunning` turns false. Creates the pipe when it
     * doesn't exist yet (EnsurePipe semantics, reference worker.go:135-152),
-    * resumes from `<store root>/forwarder/<name>.pos` when present. The
+    * resumes from `<store root>/forwarder/<name>.pos` when present (a
+    * [[StateFile]] on the store's filesystem, rewritten crash-safely). The
     * sink is closed however the loop ends, a sink or query failure
     * included (the failure still propagates). */
   def run(engine: Engine, pipeName: String, sink: Sink,
@@ -93,10 +95,9 @@ object Forwarder {
       }
     }
     val dest = engine.pipes.get(pipeName).get.destLine
-    val posFile = Paths.get(s"${engine.store.root}/forwarder/$pipeName.pos")
-    var pos: Option[String] =
-      if (Files.exists(posFile)) Some(Files.readString(posFile).trim).filter(_.nonEmpty)
-      else None
+    val posFile = new Path(engine.store.root, s"forwarder/$pipeName.pos")
+    val fs = posFile.getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
+    var pos: Option[String] = StateFile.read(fs, posFile).headOption.map(_.trim).filter(_.nonEmpty)
 
     try {
       while (keepRunning()) {
@@ -108,8 +109,7 @@ object Forwarder {
           sink.onEvents(rows.toSeq)
           // position saved only after the sink accepted the batch
           tok.foreach { t =>
-            Files.createDirectories(posFile.getParent)
-            Files.writeString(posFile, t)
+            StateFile.replace(fs, posFile, Seq(t))
             pos = Some(t)
           }
         }

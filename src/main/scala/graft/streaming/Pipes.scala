@@ -3,12 +3,11 @@ package graft.streaming
 import graft.lql.Ast._
 import graft.lql.{Parser, TagsCompiler, WhereCompiler}
 import graft.model.Model
-import graft.store.{CatEntry, Store}
+import graft.store.{CatEntry, StateFile, Store}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets
 import java.time.Instant
 
 /** A registered continuous query (reference pkg/pipe/service.go:43-51):
@@ -79,7 +78,8 @@ final case class PipeDef(name: String, from: Option[Source], where: Option[Expre
   *        contract), so cutting between groups never strands rows below an
   *        advanced cursor.
   * @param pollMs idle wait between a worker's catalog checks; the memoized
-  *        catalog load makes an idle poll a fingerprint comparison.
+  *        catalog load makes an idle poll a fingerprint comparison. A
+  *        failing worker waits [[PipeService.backoffMs]] instead.
   * @param cdcDedup enable CDC dedup-on-ingest for this service's pipes
   *        (round-13 directive 7): each trigger content-chunks its rows
   *        ([[graft.llm.Dedup.cdcChunksKeyed]], the one chunking
@@ -106,48 +106,30 @@ final class PipeService(store: Store, clock: () => Instant = () => Instant.now()
   private val whereC = new WhereCompiler(clock)
   private val fs = new Path(store.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val pipesFile = new Path(store.root, "pipes.jsonl")
-  private val pipesBak = new Path(store.root, "pipes.jsonl.bak")
 
   /** name → running worker (this JVM). */
   private val running = scala.collection.concurrent.TrieMap.empty[String, PipeWorker]
 
   // --- catalog -----------------------------------------------------------
 
-  def list(): Vector[PipeDef] = {
-    // Catalog.load discipline: when the base file is missing (crash during
-    // persist) the .bak copy from the previous persist is authoritative
-    val src =
-      if (fs.exists(pipesFile)) pipesFile
-      else if (fs.exists(pipesBak)) pipesBak
-      else return Vector.empty
-    val in = fs.open(src)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.linesIterator.filter(_.nonEmpty).map(decode).toVector.sortBy(_.name)
-  }
+  def list(): Vector[PipeDef] =
+    StateFile.read(fs, pipesFile).map(decode).sortBy(_.name)
 
   def get(name: String): Option[PipeDef] = list().find(_.name == name)
 
-  /** Crash-safe registration rewrite (Catalog.save pattern): at every
-    * instant either the new base, the old base, or its `.bak` is readable —
-    * the old delete-then-rename had a window that lost every pipe. */
-  private def persist(defs: Seq[PipeDef]): Unit = {
-    val tmp = new Path(store.root, "pipes.jsonl.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(defs.sortBy(_.name).map(encode).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(pipesBak)) fs.delete(pipesBak, false)
-    if (fs.exists(pipesFile)) Store.renameOrThrow(fs, pipesFile, pipesBak)
-    Store.renameOrThrow(fs, tmp, pipesFile)
-    fs.delete(pipesBak, false)
-  }
+  /** Crash-safe registration rewrite ([[StateFile.replace]]): a crash
+    * never loses every pipe. */
+  private def persist(defs: Seq[PipeDef]): Unit =
+    StateFile.replace(fs, pipesFile, defs.sortBy(_.name).map(encode))
 
-  private def encode(p: PipeDef): String =
+  private def encode(p: PipeDef): String = {
+    import StateFile.esc
     s"""{"name":"${esc(p.name)}","from":"${esc(p.fromStr)}","where":"${esc(p.whereStr)}"}"""
+  }
   private def decode(line: String): PipeDef = {
-    val name = jsonStr(line, "name")
-    val fromS = jsonStr(line, "from")
-    val whereS = jsonStr(line, "where")
+    val name = StateFile.str(line, "name")
+    val fromS = StateFile.str(line, "from")
+    val whereS = StateFile.str(line, "where")
     // re-parse the rendered forms through the normal LQL parser
     val stmt = "CREATE PIPE " + name +
       (if (fromS.nonEmpty) " FROM " + fromS else "") +
@@ -247,7 +229,6 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
   private val fs = new Path(store.root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val stateDir = new Path(store.root, s"pipes/${p.name}")
   private val curPath = new Path(stateDir, "cursors.jsonl")
-  private val curBak = new Path(stateDir, "cursors.jsonl.bak")
   private val cdcIndexDir = new Path(stateDir, "cdcindex")
   private val destLine = p.destLine
 
@@ -302,6 +283,8 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
   private val sleeper = new Object
   @volatile private var batchCount = 0
   @volatile private var fileCount = 0L
+  @volatile private var failure: Option[Throwable] = None
+  @volatile private var failures = 0
 
   /** Triggers that consumed at least one catalog file (progress
     * observability — replaces StreamingQuery.recentProgress). */
@@ -312,17 +295,21 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
     * exactly its file count, never by the store's total. */
   def filesConsumed: Long = fileCount
 
+  /** The most recent trigger failure, kept after later successes. */
+  def lastFailure: Option[Throwable] = failure
+
+  /** Triggers failed in a row since the last successful one; the worker
+    * waits [[PipeService.backoffMs]] of it before the next attempt. */
+  def consecutiveFailures: Int = failures
+
   private val thread = new Thread(() => {
     while (!stopped) {
-      val n =
-        try trigger()
-        catch {
-          case _: Throwable if stopped => 0
-          case e: Throwable =>
-            System.err.println(s"pipe ${p.name} trigger failed: $e"); 0
-        }
-      if (n == 0 && !stopped)
-        sleeper.synchronized { if (!stopped) sleeper.wait(pollMs) }
+      // a failure is recorded by trigger() itself
+      val n = try trigger() catch { case _: Throwable => 0 }
+      if (n == 0 && !stopped) {
+        val waitMs = backoffMs(pollMs, failures)
+        sleeper.synchronized { if (!stopped) sleeper.wait(waitMs) }
+      }
     }
   }, s"pipe-${p.name}")
   thread.setDaemon(true)
@@ -359,8 +346,12 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
           // planned file finishes its catalog swap within milliseconds
           attempts += 1
           Thread.sleep(50L * attempts)
+        case e: Throwable =>
+          if (!stopped) { failure = Some(e); failures += 1 }
+          throw e
       }
     }
+    failures = 0
     out
   }
 
@@ -531,43 +522,33 @@ final class PipeWorker private[streaming] (store: Store, p: PipeDef,
       e.getMessage.contains("FAILED_READ_FILE.FILE_NOT_EXIST"))
   }
 
-  private def loadCursors(): Unit = {
-    val src =
-      if (fs.exists(curPath)) curPath
-      else if (fs.exists(curBak)) curBak
-      else return
-    val in = fs.open(src)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.linesIterator.filter(_.nonEmpty).foreach { line =>
-      // everything after the part string is `,"seq":N}` — the last ':'
-      // always precedes the number (tag lines may themselves contain ':')
-      val seq = line.substring(line.lastIndexOf(':') + 1)
-        .takeWhile(c => c.isDigit || c == '-').toLong
-      cursors(jsonStr(line, "part")) = seq
+  private def loadCursors(): Unit =
+    StateFile.read(fs, curPath).foreach { line =>
+      cursors(StateFile.str(line, "part")) = StateFile.num(line, "seq", -1L)
     }
-  }
 
-  /** Same tmp→bak→base swap as the registration file: at every instant one
-    * of (new base, old base, bak) is readable — a crash never resets a
-    * pipe to reprocess-everything. */
-  private def saveCursors(): Unit = {
-    if (!fs.exists(stateDir)) fs.mkdirs(stateDir)
-    val tmp = new Path(stateDir, "cursors.jsonl.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(cursors.toSeq.sortBy(_._1).map { case (pt, s) =>
-      s"""{"part":"${esc(pt)}","seq":$s}"""
-    }.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(curBak)) fs.delete(curBak, false)
-    if (fs.exists(curPath)) Store.renameOrThrow(fs, curPath, curBak)
-    Store.renameOrThrow(fs, tmp, curPath)
-    fs.delete(curBak, false)
-  }
+  /** Same crash-safe rewrite as the registration file: a crash never
+    * resets a pipe to reprocess-everything. */
+  private def saveCursors(): Unit =
+    StateFile.replace(fs, curPath, cursors.toSeq.sortBy(_._1).map { case (pt, s) =>
+      s"""{"part":"${StateFile.esc(pt)}","seq":$s}"""
+    })
 }
 
 object PipeService {
   /** Reserved tag marking pipe destinations (reference ppipe.go:224-228). */
   val PipeTag = "logrange.pipe"
+
+  /** Longest wait between a failing pipe's trigger attempts. */
+  val MaxBackoffMs = 30000L
+
+  /** Wait before the next trigger after `failures` consecutive failures:
+    * `pollMs` when idle or after the first, then doubling up to
+    * [[MaxBackoffMs]] (reference pkg/pipe/worker.go:48-104 also backs off
+    * on errors) — a broken source is retried, not spun on. */
+  def backoffMs(pollMs: Long, failures: Int): Long =
+    if (failures <= 1) pollMs
+    else math.max(pollMs, math.min(pollMs << math.min(failures - 1, 20), MaxBackoffMs))
 
   /** The tag lines among `lines` that a FROM source selects — the one
     * FROM-to-parts rule of the pipe workers and the `graft-store`
@@ -592,31 +573,5 @@ object PipeService {
     val lFiltered = filter(map_entries(left),
       e => !array_contains(map_keys(tags), e.getField("key")))
     map_from_entries(concat(lFiltered, map_entries(tags)))
-  }
-
-  private[graft] def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
-
-  /** Extract `"key":"value"` from a single-line JSON record written with
-    * [[esc]]. */
-  private[graft] def jsonStr(line: String, key: String): String = {
-    val k = "\"" + key + "\":\""
-    val st = line.indexOf(k) + k.length
-    val sb = new StringBuilder
-    var i = st
-    while (line.charAt(i) != '"') {
-      if (line.charAt(i) == '\\') {
-        line.charAt(i + 1) match {
-          case '"' => sb.append('"'); case '\\' => sb.append('\\')
-          case 'n' => sb.append('\n')
-          case 'u' => sb.append(Integer.parseInt(line.substring(i + 2, i + 6), 16).toChar)
-          case o => sb.append(o)
-        }
-        i += (if (line.charAt(i + 1) == 'u') 6 else 2)
-      } else { sb.append(line.charAt(i)); i += 1 }
-    }
-    sb.toString
   }
 }

@@ -406,4 +406,65 @@ class TailForwarderSpec extends AnyFunSuite {
     assert(Files.readString(posFile) == saved,
       "the position must not advance past a batch the sink rejected")
   }
+
+  test("forwarder keeps its position under a file: store root") {
+    val dir = Files.createTempDirectory("graft-fwd-uri").toFile
+    val e = new Engine(new Store(spark, "file:" + dir.getAbsolutePath))
+    val strayBefore = new java.io.File("file:").exists()
+    ingest(e, Map("app" -> "fu"), 1000000000L, 4, "u")
+    val got = ArrayBuffer.empty[String]
+    val sink = new Forwarder.Sink {
+      def onEvents(events: Seq[Row]): Unit = got ++= events.map(_.getAs[String]("msg"))
+    }
+    def bounded(rounds: Int): () => Boolean = {
+      val r = new AtomicInteger(0); () => r.incrementAndGet() <= rounds
+    }
+    Forwarder.run(e, "fu", sink, from = Some("{app=fu}"), keepRunning = () => false)
+    e.pipes.processAllAvailable()
+    Forwarder.run(e, "fu", sink, waitTimeout = Duration.ofMillis(300),
+      poll = Duration.ofMillis(100), keepRunning = bounded(3))
+    assert(got.toSeq == (0 until 4).map(i => s"u$i"))
+    assert(new java.io.File(dir, "pipes.jsonl").exists())
+    assert(new java.io.File(dir, "forwarder/fu.pos").exists(), "the position lives under the root")
+    assert(strayBefore || !new java.io.File("file:").exists(),
+      "no file: directory in the working directory")
+    // a restarted forwarder resumes from the saved position
+    Forwarder.run(e, "fu", sink, waitTimeout = Duration.ofMillis(200),
+      poll = Duration.ofMillis(100), keepRunning = bounded(2))
+    e.pipes.stopAll()
+    assert(got.length == 4, "a second run re-forwards nothing")
+  }
+
+  test("a failing pipe trigger is recorded and backs off; the next good trigger clears it") {
+    import spark.implicits._
+    val e = freshEngine()
+    val tags = Map("app" -> "pf")
+    e.store.write(tags, Map.empty, Seq((1000000000L, "a")).toDF("ts", "msg"))
+    e.store.write(tags, Map.empty, Seq((2000000000L, "b")).toDF("ts", "msg"))
+    // delete one chunk behind the catalog's back: every trigger fails on it
+    val gone = e.store.catalog.load().filter(_.part == "app=pf").minBy(_.minTs).file
+    assert(new java.io.File(new org.apache.hadoop.fs.Path(gone).toUri.getPath).delete())
+    val svc = new graft.streaming.PipeService(e.store, pollMs = 50L)
+    svc.create(e.parse("CREATE PIPE pf FROM {app=pf}").asInstanceOf[graft.lql.Ast.CreatePipe])
+    val w = svc.worker("pf").get
+    val deadline = System.currentTimeMillis() + 60000
+    while (w.consecutiveFailures < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(w.consecutiveFailures >= 2, "the background loop keeps counting failures")
+    val name = new org.apache.hadoop.fs.Path(gone).getName
+    assert(w.lastFailure.exists(t => String.valueOf(t.getMessage).contains(name)),
+      s"lastFailure names the missing file: ${w.lastFailure}")
+    assert(graft.streaming.PipeService.backoffMs(50L, 0) == 50L)
+    assert(graft.streaming.PipeService.backoffMs(50L, 1) == 50L)
+    assert(graft.streaming.PipeService.backoffMs(50L, 3) == 200L)
+    assert(graft.streaming.PipeService.backoffMs(50L, 40) == graft.streaming.PipeService.MaxBackoffMs)
+    // drop the entry: the next trigger reads the surviving chunk (driven
+    // here, with the background loop stopped, so it is the one that does)
+    w.stop()
+    e.store.deleteFiles(Seq(gone))
+    assert(w.trigger() == 1)
+    assert(w.consecutiveFailures == 0)
+    svc.stopAll()
+    val rows = e.select("SELECT FROM {logrange.pipe=pf} LIMIT 10").collect()
+    assert(rows.map(_.getAs[String]("msg")).toSeq == Seq("b"))
+  }
 }
