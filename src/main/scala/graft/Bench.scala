@@ -62,11 +62,7 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       try q.awaitTermination(60000)
       finally q.stop() // never leave the warm-up stream running into timed entries
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(root))
+      graft.store.EventStore.rm(new java.io.File(root))
     }
     val buildSec = (System.nanoTime() - tb0) / 1e9
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

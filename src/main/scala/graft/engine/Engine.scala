@@ -5,7 +5,7 @@ import graft.lql.{FormatCompiler, Parser, TagsCompiler, WhereCompiler}
 import graft.model.Model
 import graft.store.Store
 import graft.streaming.PipeService
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -26,7 +26,9 @@ import java.util.Base64
   *     stable because seq is unique per (part);
   *  4. POSITION head/tail/continuation-token (keyset), OFFSET (± — negative
   *     walks backward, reference cursor.go:244-285), LIMIT clamped to 10000
-  *     (reference backend/querier.go:43);
+  *     (reference backend/querier.go:43); the page observes its own last
+  *     key, so the `collect()` that returns it also yields the next token
+  *     (reference backend/querier.go:120-126 reads it off the same cursor);
   *  5. projection: API shape (ts, msg, tags line, fields kv-string —
   *     reference backend/querier.go:90-107) or the format template.
   */
@@ -84,10 +86,14 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
     * line. More than [[MaxSources]] matches is an error, as in the reference
     * (pkg/partition/partition.go:228-231 errors at the GetJournals limit) —
     * silently truncating would return partial results. */
-  def prune(source: Option[Source]): Seq[String] = {
+  def prune(source: Option[Source]): Seq[String] = pruneTags(source).map(_._1)
+
+  /** [[prune]] with each matched partition's parsed tags, so a SELECT reads
+    * the catalog's part summaries once. */
+  private def pruneTags(source: Option[Source]): Seq[(String, Map[String, String])] = {
     val pred = TagsCompiler.compile(source)
     val matched = store.partitions().filter { case (_, tags) => pred(tags) }
-      .keys.toSeq.sorted
+      .toSeq.sortBy(_._1)
     if (matched.length > MaxSources)
       throw LqlException(
         s"Limit exceeds. Expected no more than $MaxSources partitions, but at least ${matched.length} found")
@@ -97,11 +103,9 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
   /** Literal tag map per selected partition as a Column (for {vars:x} tag
     * fallback) — a small CASE chain over ≤50 partitions, constant-folded by
     * Catalyst; avoids parsing tag lines per row at runtime. */
-  private def tagsMapCol(parts: Seq[String]): Column = {
-    val known = store.partitions()
+  private def tagsMapCol(parts: Seq[(String, Map[String, String])]): Column = {
     val empty = map().cast("map<string,string>")
-    parts.foldLeft(empty) { (acc, line) =>
-      val tags = known.getOrElse(line, Map.empty)
+    parts.foldLeft(empty) { case (acc, (line, tags)) =>
       val m =
         if (tags.isEmpty) empty
         else map(tags.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
@@ -156,10 +160,14 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
 
   def select(sel: Select): DataFrame = selectWithToken(sel)._1
 
-  /** Run a SELECT and also build the column set needed to mint a
-    * continuation token from the page's last row (see [[pageToken]]). */
-  def selectWithToken(sel: Select): (DataFrame, DataFrame) = {
-    val parts = prune(sel.source)
+  /** Run a SELECT; the page carries an observed metric — the max of
+    * (ts, part, seq) and the row count over the rows it returns — that its
+    * own action fills in, so [[pageToken]] needs no second job. Each page
+    * observes under its own name: Spark rejects a plan (a union of two
+    * pages, say) in which two frames share a metric name. */
+  def selectWithToken(sel: Select): (DataFrame, Engine.PageKeys) = {
+    val tagged = pruneTags(sel.source)
+    val parts = tagged.map(_._1)
     // RANGE — inclusive on both ends (reference fiterator.go:93-95);
     // absent bounds are 0 / MaxInt64 (reference cursor.go:94-100). The
     // range reaches the store read too, so non-overlapping chunks are
@@ -224,7 +232,11 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
         }
     }
 
-    (project(page, sel, parts), page.select(col("ts"), col("part"), col("seq")))
+    val name = s"graft_page_${Engine.pageIds.incrementAndGet()}"
+    val observed = page.observe(name,
+      max(struct(col("ts"), col("part"), col("seq"))).as("last"), count(lit(1)).as("rows"))
+    val api = project(observed, sel, tagged)
+    (api, Engine.PageKeys(api, name))
   }
 
   /** An LQL integer Spark takes as an Int: a magnitude above
@@ -234,16 +246,27 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
       throw LqlException(s"$name $v is out of range (at most ${Int.MaxValue} in magnitude)")
     else v.toInt
 
-  /** Mint the continuation token from the last row of the page (an action).
-    * Returns None when the page is empty. */
-  def pageToken(keyDf: DataFrame): Option[String] = {
-    val last = keyDf.orderBy(descOrder: _*).limit(1).collect()
-    last.headOption.map(r => PosKey(r.getLong(0), r.getString(1), r.getLong(2)).token)
+  /** The continuation token after the page's last row; None when the page
+    * is empty. After the page's `collect()` this reads the key that
+    * collect observed and fires no job. Before any action (or after one
+    * that ran a different plan, such as `take`, `show` or `count`), and on
+    * an empty page, the observed count reads 0, so it collects a fresh copy
+    * of the page once and reads that copy's metric: one job, no more than
+    * the page itself costs. */
+  def pageToken(keys: Engine.PageKeys): Option[String] = {
+    def last(df: DataFrame): Option[Row] =
+      df.queryExecution.observedMetrics.get(keys.name).filter(_.getLong(1) > 0).map(_.getStruct(0))
+    last(keys.page).orElse {
+      val fresh = keys.page.select(col("*"))
+      fresh.collect()
+      last(fresh)
+    }.map(r => PosKey(r.getLong(0), r.getString(1), r.getLong(2)).token)
   }
 
   /** API projection (reference backend/querier.go:90-107) or, when a format
     * template is present, the single formatted `line` column. */
-  private def project(df: DataFrame, sel: Select, parts: Seq[String]): DataFrame =
+  private def project(df: DataFrame, sel: Select,
+      parts: Seq[(String, Map[String, String])]): DataFrame =
     sel.format match {
       case Some(f) =>
         val line = FormatCompiler.compile(
@@ -386,4 +409,15 @@ final class Engine(val store: Store, clock: () => Instant = () => Instant.now())
       .toDF("partition", "before_size", "after_size", "before_records", "after_records",
         "chunks_deleted", "deleted")
   }
+}
+
+object Engine {
+  /** The handle [[Engine.pageToken]] mints a page's token from: the page
+    * as [[Engine.selectWithToken]] returned it, and the name under which
+    * the page observes its last key and row count. */
+  final case class PageKeys(page: DataFrame, name: String)
+
+  /** Numbers every page's metric name, JVM-wide: pages of two engines can
+    * meet in one plan too. */
+  private val pageIds = new java.util.concurrent.atomic.AtomicLong
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.engine.{Engine, Tail}
-import graft.store.Store
+import graft.store.{EventStore, Store}
 import graft.streaming.{Forwarder, Syslog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,11 +27,7 @@ object AdminQueries {
     * be deleted before returning — repeated gate+bench runs must not
     * accumulate orphaned trees in tmp. */
   private def discard(e: Engine): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(e.store.root))
+    EventStore.rm(new java.io.File(e.store.root))
     Store.forgetEpoch(e.store.root)
   }
 

@@ -364,8 +364,11 @@ object Collector {
 
     try {
       // (file, idx) is the source row identity: seq follows line order
-      // within each file and is stable under stage retries
-      store.appendWithSeq(withFields, orderBy = Seq(col("file"), col("idx")))
+      // within each file and is stable under stage retries. One file is
+      // one tail task and one part, so a one-file batch stays in that one
+      // task: numbered and written with no exchange, no parallelism lost
+      store.appendWithSeq(if (toRead.size == 1) withFields.coalesce(1) else withFields,
+        orderBy = Seq(col("file"), col("idx")))
       if (trackPositions) {
         // text: the new carry state is the ts of each file's LAST line (the
         // parser's carry-forward applied), found via max_by on the line index
@@ -406,14 +409,16 @@ object Collector {
 
   /** Read `[off, end)` of each file as one UTF-8 string on the executors —
     * files are the parallelism unit (the reference's per-file workers).
-    * Tails are bounded by collection cadence; a single tail over 2 GiB
-    * fails loudly rather than silently truncating. */
-  private def readTails(spark: org.apache.spark.sql.SparkSession, conf: Configuration,
+    * The file list is a driver-local `Seq`, which Spark's local scan
+    * already splits into `min(files, default parallelism)` tasks, so the
+    * reads run in one stage with no exchange, one task per file up to the
+    * core count. Tails are bounded by collection cadence; a single tail
+    * over 2 GiB fails loudly rather than silently truncating. */
+  private[graft] def readTails(spark: org.apache.spark.sql.SparkSession, conf: Configuration,
       toRead: Seq[(String, Long, Long)]): org.apache.spark.sql.Dataset[(String, String)] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(new SerConf(conf))
     spark.createDataset(toRead)
-      .repartition(math.max(1, math.min(toRead.size, spark.sparkContext.defaultParallelism)))
       .mapPartitions { it =>
         val c = bc.value.value
         it.map { case (path, off, end) =>

@@ -47,7 +47,8 @@ object EventStore {
     stale.foreach(rm)
   }
 
-  private def rm(f: java.io.File): Unit = {
+  /** Delete a local file or directory tree (best effort). */
+  private[graft] def rm(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
     f.delete()
   }

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -302,6 +303,17 @@ final class Store(val spark: SparkSession, val root: String) {
     * still running". All seq-assigning ingest paths (write, collector,
     * pipe destinations) go through here.
     *
+    * The seq window clusters the rows by `part`, so they go straight to
+    * the staged write without [[append]]'s repartition. A driver-local
+    * batch (its optimized plan is a `LocalRelation`, as [[write]]'s events
+    * are) is first coalesced to one partition: its rows already sit in
+    * driver memory, so one task is no funnel, and the window and the write
+    * then run in one stage with no exchange, as they do for any input
+    * planned as one partition (the collector coalesces its one-file
+    * batch, which one tail task reads anyway). Every
+    * other input (a pipe trigger, a bulk load) keeps the window's one
+    * exchange on `part`.
+    *
     * @param partsHint the exact target partitions when the caller knows
     *        them (single-tag writes, pipe destinations): consumers then
     *        defer only on those; None (path-derived/bulk targets) defers
@@ -342,8 +354,14 @@ final class Store(val spark: SparkSession, val root: String) {
           }
           throw t
       }
-    try append(assignSeqEpoch(epoch, rows, orderBy), maxRecordsPerFile, saltBuckets)
-    finally ext match {
+    try {
+      if (saltBuckets > 1) append(assignSeqEpoch(epoch, rows, orderBy), maxRecordsPerFile, saltBuckets)
+      else {
+        val local = rows.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+        writeStaged(assignSeqEpoch(epoch, if (local) rows.coalesce(1) else rows, orderBy),
+          maxRecordsPerFile)
+      }
+    } finally ext match {
       case Some(r) => r.end(epoch)
       case None => Store.inFlightFor(root).remove(epoch)
     }
@@ -394,8 +412,13 @@ final class Store(val spark: SparkSession, val root: String) {
     * pipe's streaming append racing a foreground ingest) and the set of
     * added files is known exactly instead of diffing directory listings.
     * Same write-then-commit shape a transaction log would use at 100 TB.
-    */
-  /** @param saltBuckets ingest parallelism per tag partition: 1 (default)
+    *
+    * Every input pays one exchange on `part` (Spark drops it when the rows
+    * are already hash-clustered on `part`), so no batch funnels through
+    * one task whatever its size; [[appendWithSeq]] is the path that can
+    * write a driver-local batch in one stage.
+    *
+    * @param saltBuckets ingest parallelism per tag partition: 1 (default)
     *        keeps one writer task per partition — one ts-sorted file per
     *        batch, tightest chunk pruning; N>1 spreads a HOT partition's
     *        batch over N tasks/files (seq-hash salt) so a single loud tag
@@ -404,19 +427,28 @@ final class Store(val spark: SparkSession, val root: String) {
     *        query result. At the 100 TB design point bulk loads use N>1.
     */
   def append(rows: DataFrame, maxRecordsPerFile: Long = 0, saltBuckets: Int = 1): Unit = {
-    val stagingId = java.util.UUID.randomUUID().toString.take(12)
-    val stagingDir = new Path(s"$root/staging/$stagingId")
-    val cols = Seq("ts", "msg", "fields", "seq", "part")
-    val selected = rows.select(cols.map(col): _*)
-    val distributed =
+    val selected = rows.select(writeCols: _*)
+    writeStaged(
       if (saltBuckets <= 1) selected.repartition(col("part"))
       else
         // range partitioning on (part, salt) with an explicit count maps
         // salt slices 1:1 onto tasks (hash could collide them; AQE can't
         // coalesce an explicit count)
         selected.repartitionByRange(saltBuckets,
-          col("part"), pmod(xxhash64(col("seq")), lit(saltBuckets)))
-    val w = distributed
+          col("part"), pmod(xxhash64(col("seq")), lit(saltBuckets))),
+      maxRecordsPerFile)
+  }
+
+  private val writeCols = Seq("ts", "msg", "fields", "seq", "part").map(col)
+
+  /** The staged write under [[append]] for rows already clustered by
+    * `part` (each part's rows in one task, or in the salt tasks [[append]]
+    * chose): sort within each task, write into staging, move, register.
+    * Adds no exchange of its own. */
+  private def writeStaged(clustered: DataFrame, maxRecordsPerFile: Long): Unit = {
+    val stagingId = java.util.UUID.randomUUID().toString.take(12)
+    val stagingDir = new Path(s"$root/staging/$stagingId")
+    val w = clustered.select(writeCols: _*)
       .sortWithinPartitions("part", "ts", "seq")
       .write
       .mode(SaveMode.Overwrite)

@@ -3,6 +3,7 @@ package graft
 import graft.engine.Engine
 import graft.lql.Ast.LqlException
 import graft.store.Store
+import org.apache.spark.sql.functions.{lit, typedLit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -232,5 +233,120 @@ class EngineSpec extends AnyFunSuite {
     val seqs = e2.store.read(Seq("app=hw")).select("seq").collect().map(_.getLong(0))
     assert(seqs.length == 6 && seqs.distinct.length == 6)
     assert(seqs.max > hw)
+  }
+
+  test("the page's observed token equals the full-sort token (randomized, ts ties across and within parts)") {
+    import spark.implicits._
+    val e = freshEngine()
+    val rnd = new scala.util.Random(13)
+    // ts on a 6-second grid: ties within each part and across the three
+    // parts; two writes per part, so two files and two seq epochs each
+    for (app <- Seq("a", "b", "c"); batch <- 0 until 2) {
+      val rows = (0 until 12).map(i => ((1 + rnd.nextInt(6)) * 1000000000L,
+        s"$app$batch-$i" + (if (rnd.nextInt(3) == 0) "x" else "")))
+      e.store.write(Map("app" -> app), Map.empty, rows.toDF("ts", "msg"))
+    }
+    final case class K(ts: Long, part: String, seq: Long, msg: String) {
+      def key: (Long, String, Long) = (ts, part, seq)
+    }
+    val all = e.store.read(e.prune(None)).select("ts", "part", "seq", "msg").collect()
+      .map(r => K(r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
+      .sortBy(_.key)
+
+    (0 until 40).foreach { round =>
+      val fromB = rnd.nextInt(4) == 0
+      val where = rnd.nextInt(3) == 0
+      val range = if (rnd.nextInt(3) == 0) {
+        val lo = 1 + rnd.nextInt(6)
+        Some((lo * 1000000000L, (lo + rnd.nextInt(3)) * 1000000000L))
+      } else None
+      val format = rnd.nextInt(3) == 0
+      val limit = 1 + rnd.nextInt(15)
+      val at = all(rnd.nextInt(all.size))
+      // 0 head, 1 tail, 2 continuation (OFFSET >= 0), 3 continuation (OFFSET < 0)
+      val kind = rnd.nextInt(4)
+      val offset = kind match {
+        case 0 | 2 => rnd.nextInt(4)
+        case _ => -(1 + rnd.nextInt(10))
+      }
+      val position = kind match {
+        case 0 => ""
+        case 1 => " POSITION tail"
+        case _ => s""" POSITION "${e.PosKey(at.ts, at.part, at.seq).token}""""
+      }
+      val lql = (if (format) "SELECT \"{msg}|{vars:app}\"" else "SELECT") +
+        (if (fromB) " FROM {app=b}" else "") +
+        range.map { case (lo, hi) => s""" RANGE ["$lo":"$hi"]""" }.getOrElse("") +
+        (if (where) " WHERE msg CONTAINS \"x\"" else "") +
+        position + s" OFFSET $offset LIMIT $limit"
+
+      // the model: the engine's page semantics over the sorted rows
+      val rows = all.filter(k => (!fromB || k.part == "app=b") && (!where || k.msg.contains("x")) &&
+        range.forall { case (lo, hi) => k.ts >= lo && k.ts <= hi })
+      val after = (k: K) => Ordering[(Long, String, Long)].gt(k.key, at.key)
+      val want = kind match {
+        case 0 => rows.drop(offset).take(limit)
+        case 1 => rows.takeRight(-offset).take(limit)
+        case _ if offset >= 0 => rows.filter(after).drop(offset).take(limit)
+        case _ => (rows.filterNot(after).takeRight(-offset) ++ rows.filter(after)).take(limit)
+      }
+      // the reference token: the page's keys sorted descending, first row
+      val refToken = want.sortBy(_.key)(Ordering[(Long, String, Long)].reverse).headOption
+        .map(k => e.PosKey(k.ts, k.part, k.seq).token)
+
+      val (df, keys) = e.selectWithToken(e.parse(lql).asInstanceOf[graft.lql.Ast.Select])
+      // every other round asks for the token before the page runs
+      val early = if (round % 2 == 0) Some(e.pageToken(keys)) else None
+      val got = df.collect().map { r =>
+        if (format) {
+          val Array(msg, app) = r.getAs[String]("line").split('|')
+          assert(s"app=$app" == all.find(_.msg == msg).get.part, lql)
+          msg
+        } else r.getAs[String]("msg")
+      }.toSeq
+      assert(got == want.map(_.msg), lql)
+      assert(e.pageToken(keys) == refToken, lql)
+      early.foreach(t => assert(t == refToken, lql))
+    }
+  }
+
+  test("a driver-local Store.write numbers and writes its batch in one job, with no exchange") {
+    import spark.implicits._
+    val e = freshEngine()
+    // ts ties: seq must follow the content order (ts, msg, fields)
+    val rows = (0 until 20).map(i => ((1 + i % 4) * 1000000000L, s"m${(i * 7) % 20}"))
+    val fired = TestSpark.fired(
+      e.store.write(Map("app" -> "w"), Map("k" -> "v"), rows.toDF("ts", "msg")))
+    assert(fired.jobs == 1)
+    assert(fired.plans.nonEmpty && fired.plans.forall(!_.contains("Exchange")),
+      fired.plans.mkString("\n"))
+    val mask = (1L << Store.SeqEpochShift) - 1
+    def seqs(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.select("msg", "seq").collect().map(r => r.getString(0) -> (r.getLong(1) & mask)).toMap
+    val written = seqs(e.store.read(Seq("app=w")))
+    assert(written.values.toSet == (0L until 20L).toSet)
+    assert(written == seqs(e.store.assignSeq(rows.toDF("ts", "msg")
+      .withColumn("fields", typedLit(Map("k" -> "v")))
+      .withColumn("part", lit("app=w")))))
+  }
+
+  test("a multi-part driver-local appendWithSeq writes one file per part unless maxRecordsPerFile splits it") {
+    import spark.implicits._
+    val rows = for (app <- Seq("p", "q", "r"); i <- 0 until 5)
+      yield ((i + 1) * 1000000000L, s"$app$i", s"app=$app")
+    def load(maxRecordsPerFile: Long): Engine = {
+      val e = freshEngine()
+      e.store.appendWithSeq(rows.toDF("ts", "msg", "part")
+        .withColumn("fields", typedLit(Map.empty[String, String])), maxRecordsPerFile)
+      e
+    }
+    Seq(0L -> 1, 2L -> 3).foreach { case (maxRecords, files) =>
+      val e = load(maxRecords)
+      Seq("app=p", "app=q", "app=r").foreach { part =>
+        assert(e.store.catalog.entriesForPart(part).size == files, s"$part, maxRecordsPerFile $maxRecords")
+        val got = e.store.read(Seq(part)).orderBy("seq").select("msg").collect().map(_.getString(0))
+        assert(got.toSeq == (0 until 5).map(i => s"${part.last}$i"))
+      }
+    }
   }
 }

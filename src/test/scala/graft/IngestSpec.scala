@@ -119,6 +119,46 @@ class IngestSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).distinct.length == 4, "(part, seq) unique across runs")
   }
 
+  test("collector tailing: tails of 3 files are read in one stage, one task per file up to the cores") {
+    import java.nio.file.Files
+    val src = Files.createTempDirectory("graft-tails")
+    val files = Seq("a", "b", "c").map { n =>
+      val f = src.resolve(s"$n.log")
+      Files.writeString(f, s"head-$n\ntail-$n\n")
+      f.toString
+    }
+    // the second file is read from its second line on
+    val toRead = files.zipWithIndex.map { case (f, i) =>
+      (f, if (i == 1) 7L else 0L, Files.size(java.nio.file.Paths.get(f)))
+    }
+    val tails = Collector.readTails(spark, spark.sparkContext.hadoopConfiguration, toRead)
+    var got = Map.empty[String, String]
+    val fired = TestSpark.fired { got = tails.collect().toMap }
+    assert(got == Map(files(0) -> "head-a\ntail-a\n", files(1) -> "tail-b\n",
+      files(2) -> "head-c\ntail-c\n"))
+    assert(fired.jobs == 1)
+    assert(fired.tasks == math.min(3, spark.sparkContext.defaultParallelism))
+    assert(fired.plans.nonEmpty && fired.plans.forall(!_.contains("Exchange")),
+      fired.plans.mkString("\n"))
+  }
+
+  test("collector tailing: a one-file batch is read, numbered and written in one job") {
+    import java.nio.file.Files
+    val store = new graft.store.Store(spark, Files.createTempDirectory("graft-col").toString)
+    val src = Files.createTempDirectory("graft-src")
+    Files.writeString(src.resolve("a.raw"), "one\ntwo\nthree\n")
+    val schema = PathSchema(".*/(?<name>[^/.]+)\\.raw$", "pure", Map("name" -> "{name}"))
+    val clock = () => Instant.parse("2024-05-06T07:08:09Z")
+    var files = 0
+    val fired = TestSpark.fired { files = Collector.ingest(store, schema, s"$src/*.raw", clock) }
+    assert(files == 1)
+    assert(fired.jobs == 1)
+    assert(fired.plans.nonEmpty && fired.plans.forall(!_.contains("Exchange")),
+      fired.plans.mkString("\n"))
+    val rows = store.read(Seq("name=a")).orderBy("seq").select("msg").collect().map(_.getString(0))
+    assert(rows.toSeq == Seq("one", "two", "three"), "seq follows line order")
+  }
+
   test("collector tailing: dated text tail parses appended dates") {
     import java.nio.file.{Files, StandardOpenOption}
     val store = new graft.store.Store(spark, Files.createTempDirectory("graft-col").toString)

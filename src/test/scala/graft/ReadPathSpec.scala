@@ -1,16 +1,14 @@
 package graft
 
 import graft.engine.Engine
+import graft.lql.Ast.Select
 import graft.store.Store
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The store's one read path — Spark's parquet scan over the catalog file
   * index — as the engine and the `graft-store` stream see it: building a
@@ -22,34 +20,7 @@ class ReadPathSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private val BuildProp = "graft.test.build"
-  private val SentinelProp = "graft.test.sentinel"
-
-  /** Spark jobs started while `build` runs on this thread. Its jobs carry
-    * a local property; a sentinel job afterwards drains the listener bus,
-    * which delivers events in order. */
-  private def jobsFiredBy(build: => Any): Int = {
-    val sc = spark.sparkContext
-    val fired = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          if (p.getProperty(BuildProp) != null) fired.incrementAndGet()
-          if (p.getProperty(SentinelProp) != null) drained.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(BuildProp, "1")
-      try build finally sc.setLocalProperty(BuildProp, null)
-      sc.setLocalProperty(SentinelProp, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(SentinelProp, null)
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      fired.get
-    } finally sc.removeSparkListener(listener)
-  }
+  import TestSpark.jobsFiredBy
 
   /** An engine whose one partition holds `chunks` one-row chunk files. */
   private def manyChunks(part: String, chunks: Int): Engine = {
@@ -77,6 +48,58 @@ class ReadPathSpec extends AnyFunSuite {
     assert(jobsFiredBy { all = e.store.read(Seq("app=many")) } == 0)
     assert(all.count() == 40)
     assert(all.inputFiles.length == 40)
+  }
+
+  private def page(e: Engine, lql: String): (DataFrame, Engine.PageKeys) =
+    e.selectWithToken(e.parse(lql).asInstanceOf[Select])
+
+  private def msgs(df: DataFrame): Seq[String] = df.collect().map(_.getAs[String]("msg")).toSeq
+
+  /** The continuation token after the stored row with message `msg`. */
+  private def tokenAfter(e: Engine, msg: String): String = {
+    val r = e.store.read(Seq("app=many")).where(col("msg") === msg)
+      .select("ts", "part", "seq").head()
+    e.PosKey(r.getLong(0), r.getString(1), r.getLong(2)).token
+  }
+
+  test("a page's collect yields its token: one job for both") {
+    val e = forty
+    val (df, keys) = page(e, "SELECT FROM {app=many} LIMIT 10")
+    var rows = Seq.empty[String]
+    var tok: Option[String] = None
+    assert(jobsFiredBy { rows = msgs(df); tok = e.pageToken(keys) } == 1)
+    assert(rows == (0 until 10).map(i => s"m$i"))
+    assert(tok.contains(tokenAfter(e, "m9")))
+    assert(msgs(e.select(s"""SELECT FROM {app=many} POSITION "${tok.get}" LIMIT 3""")) ==
+      Seq("m10", "m11", "m12"))
+  }
+
+  test("pageToken before any action mints the token in one job") {
+    val e = forty
+    val (df, keys) = page(e, "SELECT FROM {app=many} OFFSET 5 LIMIT 10")
+    var tok: Option[String] = None
+    assert(jobsFiredBy { tok = e.pageToken(keys) } == 1)
+    assert(tok.contains(tokenAfter(e, "m14")))
+    assert(msgs(df) == (5 until 15).map(i => s"m$i"))
+    assert(e.pageToken(keys) == tok)
+  }
+
+  test("an empty page has no token") {
+    val e = forty
+    Seq("SELECT FROM {app=many} POSITION tail LIMIT 10",
+        "SELECT FROM {app=many} WHERE msg CONTAINS \"zzz\" LIMIT 10",
+        s"""SELECT FROM {app=many} POSITION "${tokenAfter(e, "m39")}" LIMIT 10""").foreach { lql =>
+      val (df, keys) = page(e, lql)
+      assert(df.collect().isEmpty, lql)
+      assert(e.pageToken(keys).isEmpty, lql)
+    }
+  }
+
+  test("two pages union into one frame (each observes under its own name)") {
+    val e = forty
+    val both = e.select("SELECT FROM {app=many} LIMIT 3")
+      .union(e.select("SELECT FROM {app=many} POSITION tail OFFSET -2 LIMIT 10"))
+    assert(msgs(both).sorted == Seq("m0", "m1", "m2", "m38", "m39"))
   }
 
   test("an AvailableNow drain's numInputRows sums to the rows it delivers") {
